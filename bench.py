@@ -170,6 +170,32 @@ def _save_history(runs: list[dict], record: dict) -> None:
     except OSError:
         pass  # read-only checkout: the detector still ran, just unsaved
 
+_COMPACT_JSON = {"separators": (",", ":")}
+
+
+def _chunk_lines(tag: str, field: str, d: dict, max_len: int = 600) -> list[str]:
+    """Split ``d`` over compact JSON lines ``{"metric": "<tag> (i/n)",
+    field: chunk}``, each at most ``max_len`` chars (an entry too long
+    for any line still gets one line of its own).  Chunks are sized
+    with the REAL tag at its worst-case index width — n never exceeds
+    ``len(d)``, so an ``(i/n)`` of ``len(d)``'s digit count bounds
+    every suffix the final pass can print."""
+    nines = "9" * len(str(max(len(d), 1)))
+    worst_tag = f"{tag} ({nines}/{nines})"
+    chunks: list[dict] = [{}]
+    for k in d:  # insertion order — stable across runs
+        chunks[-1][k] = d[k]
+        probe = json.dumps({"metric": worst_tag, field: chunks[-1]}, **_COMPACT_JSON)
+        if len(probe) > max_len and len(chunks[-1]) > 1:
+            chunks[-1].pop(k)
+            chunks.append({k: d[k]})
+    n = len(chunks)
+    return [
+        json.dumps({"metric": f"{tag} ({i + 1}/{n})", field: c}, **_COMPACT_JSON)
+        for i, c in enumerate(chunks)
+    ]
+
+
 # Headline set (22): the BASELINE.md shapes plus one representative per
 # capability layer (relational / window / streaming twin / ML / LLM /
 # round-2 training-data ops).
@@ -450,24 +476,6 @@ def main() -> None:
     # fits.  Pure output-format addition: timings, methodology, and
     # the two existing lines (detail above, summary below) are
     # unchanged.
-    _compact = {"separators": (",", ":")}
-
-    def _chunk_lines(tag: str, field: str, d: dict, max_len: int = 600):
-        chunks: list[dict] = [{}]
-        for k in d:  # insertion order — stable across runs
-            chunks[-1][k] = d[k]
-            probe = json.dumps({"metric": "x (x 9/9)", field: chunks[-1]}, **_compact)
-            if len(probe) > max_len and len(chunks[-1]) > 1:
-                chunks[-1].pop(k)
-                chunks.append({k: d[k]})
-        n = len(chunks)
-        return [
-            json.dumps(
-                {"metric": f"{tag} ({i + 1}/{n})", field: c}, **_compact
-            )
-            for i, c in enumerate(chunks)
-        ]
-
     for line in _chunk_lines("bench extras per-query", "queries_extra", extra_timings):
         print(line)
     print(
@@ -479,7 +487,7 @@ def main() -> None:
                 "sf": sf,
                 "queries": timings,
             },
-            **_compact,
+            **_COMPACT_JSON,
         )
     )
     # Compact summary line LAST: the full line above outgrew the

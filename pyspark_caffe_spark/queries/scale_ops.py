@@ -9,17 +9,35 @@ the similarity-search candidate set to a few probed clusters.
 
 from __future__ import annotations
 
-import contextlib
-import errno
 import os
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_caffe_spark.annindex import (
+    _ANN_K,
+    _ANN_M,
+    _ANN_NLIST,
+    _ANN_NPROBE,
+    _ann_append,
+    _ann_compact_and_prove,
+    _ann_embeddings,
+    _ann_lay_ingest_history,
+    _ann_live_paths,
+    _ann_manifest_read,
+    _ann_open,
+    _ann_query_pred,
+    _ann_reuse_or_rebuild,
+    _ann_root,
+    _ann_train_centroids,
+    _ann_validate_corpus,
+    _build_ann_index,
+    _serve_from_ann_index,
+)
 from pyspark_caffe_spark.money import (
     exact_money_sum,
     exact_money_units_sum,
@@ -28,85 +46,6 @@ from pyspark_caffe_spark.money import (
 from pyspark_caffe_spark.materialize import pin, pin_lazy
 from pyspark_caffe_spark.registry import query
 from pyspark_caffe_spark.tables import load_table
-
-# Exceptions a spark.read.parquet of a TORN dataset (crash mid-write:
-# corrupt footer, missing commit marker) can raise — reuse gates catch
-# these alongside FileNotFoundError/ValueError and route to rebuild.
-# Guarded imports: Spark Connect sessions have no py4j.
-try:
-    from pyspark.errors import AnalysisException as _AnalysisException
-except ImportError:  # pragma: no cover - AnalysisException exists in 4.x
-    _AnalysisException = None
-try:
-    from py4j.protocol import Py4JJavaError as _Py4JJavaError
-except ImportError:  # pragma: no cover - connect-only installs
-    _Py4JJavaError = None
-_SPARK_READ_ERRORS = tuple(
-    e for e in (_AnalysisException, _Py4JJavaError) if e is not None
-)
-
-
-#: message/errorClass shapes that mean "the artifact on disk is
-#: absent, unreadable, or torn" — the ONLY failures a reuse gate owns.
-_ARTIFACT_ERROR_SHAPES = (
-    # absent / vanished paths and the schema-inference failure an
-    # empty-or-torn dataset dir produces at spark.read time
-    "PATH_NOT_FOUND",
-    "Path does not exist",
-    "UNABLE_TO_INFER_SCHEMA",
-    "Unable to infer schema",
-    # torn data files: ALL the shapes measured from torn files on this
-    # pyspark — a bare-fs tear fails the footer parse, while a tear
-    # under a Spark-written dir fails the .crc sidecar check first
-    "FAILED_READ_FILE",
-    "CANNOT_READ_FILE_FOOTER",
-    "not a Parquet file",
-    "ChecksumException",
-    "Checksum error",
-)
-
-
-def _is_artifact_read_failure(ex: BaseException) -> bool:
-    """True when ``ex`` is the kind of failure a reuse gate OWNS —
-    the persisted artifact is absent, unreadable, or torn — as opposed
-    to an unrelated runtime error that happened to surface inside the
-    gate's try block.  BOTH exception classes are gated on message
-    shape (round-13 advisory):
-
-    - AnalysisException is NOT artifact-shaped by isinstance alone — a
-      genuine code bug raised inside the gated calls (UNRESOLVED_COLUMN
-      from a bad projection, a malformed expression) also surfaces as
-      AnalysisException, and routing it to a silent rebuild+retry
-      would mask the bug AND quietly turn a pure-serve product metric
-      into serve+build.  It qualifies only with an artifact-shaped
-      errorClass/message (absent path, uninferable schema, unreadable
-      file).
-    - Py4JJavaError likewise qualifies only on the torn-file shapes;
-      a transient executor OOM, disk-full, or shuffle failure must
-      PROPAGATE.  Matching skips pure stack-frame lines ("at pkg...")
-      so a frame whose class name happens to contain a needle can
-      never classify an unrelated error; exception-message and
-      "Caused by:" lines (where a wrapped torn-read cause genuinely
-      surfaces) are kept.
-    """
-    if _AnalysisException is not None and isinstance(ex, _AnalysisException):
-        cond = getattr(ex, "getCondition", None) or getattr(
-            ex, "getErrorClass", None
-        )
-        name = ""
-        if callable(cond):
-            try:
-                name = cond() or ""
-            except Exception:
-                name = ""
-        hay = f"{name}\n{ex}"
-        return any(shape in hay for shape in _ARTIFACT_ERROR_SHAPES)
-    hay = "\n".join(
-        line
-        for line in str(ex).splitlines()
-        if not line.lstrip().startswith("at ")
-    )
-    return any(shape in hay for shape in _ARTIFACT_ERROR_SHAPES)
 
 
 @query(
@@ -369,24 +308,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.filter(keep).select("event_id", "event_type", "value")
 
 
-def _lloyd_spherical(sample: np.ndarray, nlist: int, iters: int = 10) -> np.ndarray:
-    """Spherical Lloyd k-means on unit vectors: assign by max dot
-    product, recenter on the L2-normalized mean. Deterministic — init
-    is the first ``nlist`` sample rows (sample is vec_id-ordered); an
-    emptied cluster keeps its previous centroid."""
-    cents = sample[:nlist].copy()
-    for _ in range(iters):
-        assign = np.argmax(sample @ cents.T, axis=1)
-        for c in range(nlist):
-            members = sample[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                norm = np.linalg.norm(m)
-                if norm > 0:
-                    cents[c] = m / norm
-    return cents
-
-
 @query(
     "sim_knn_ivf",
     oracle="""
@@ -426,24 +347,11 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the same query (vecops.knn_for_query, JVM tier) on ≥ 90% of
     slots (tightened from 60%; measured value is 100%). Oracle emits
     literal ``true``."""
-    nlist, nprobe, k = 16, 6, 10
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label"
-    )
-    # deterministic ~50% training sample (hash-gated, not .sample() —
-    # partitioning-independent); cap the driver-side matrix at 4096 rows
-    train = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(2)) == 0)
-        .orderBy("vec_id").limit(4096).collect()
-    )
-    sample = np.stack([np.array(r["emb"]) for r in train])
-    if len(sample) < nlist:
-        # degenerate corpus: fewer training rows than requested lists —
-        # shrink nlist (and nprobe with it) rather than silently
-        # training short centroids
-        nlist = max(1, len(sample))
-        nprobe = min(nprobe, nlist)
-    centroids = _lloyd_spherical(sample, nlist, iters=10)
+    nprobe, k = 6, 10
+    emb = _ann_embeddings(spark, sf_dir)
+    centroids = _ann_train_centroids(emb, 16)
+    # a degenerate corpus trains fewer lists; nprobe shrinks with them
+    nprobe = min(nprobe, len(centroids))
     qrow = emb.filter(F.col("vec_id") == 0).collect()  # query = vec_id 0
     if not qrow:
         raise ValueError("sim_knn_ivf: query vector vec_id=0 not present in corpus")
@@ -540,30 +448,15 @@ def sim_knn_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF top-10 must overlap that query's EXACT top-10 on ≥ 9 slots.
     A single dropped or duplicated query row, or one query whose
     recall collapses, breaks the hash."""
-    nlist, nprobe, k, m_assign = 16, 10, 10, 3
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    # bounded query slice: `vec_id < 2000` is a no-op at every fixture
-    # SF (ids stop below 2000) but pins |Q| at scale — a query set
-    # defined as a fixed fraction of the corpus would make the serving
-    # pass O(|Q|·N) = quadratic (round-8 100× sweep lesson)
-    qpred = (F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)
+    nprobe, k, m_assign = _ANN_NPROBE, _ANN_K, _ANN_M
+    emb = _ann_embeddings(spark, sf_dir)
+    # bounded query slice (see _ann_query_pred)
+    qpred = _ann_query_pred()
     queries_df = emb.filter(qpred)
     corpus = emb.filter(~qpred)
-
-    # centroid training: deterministic hash sample, driver-side Lloyd
-    # on ≤4096 rows (the FAISS recipe — train on a sample, broadcast
-    # the tiny centroid table)
-    train = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(2)) == 0)
-        .orderBy("vec_id").limit(4096).collect()
-    )
-    sample = np.stack([np.array(r["emb"]) for r in train])
-    if len(sample) < nlist:
-        nlist = max(1, len(sample))
-        nprobe = min(nprobe, nlist)
-    centroids = _lloyd_spherical(sample, nlist, iters=10)
+    centroids = _ann_train_centroids(emb, _ANN_NLIST)
+    nlist = len(centroids)
+    nprobe = min(nprobe, nlist)
 
     from pyspark_caffe_spark import vecops
 
@@ -1323,9 +1216,7 @@ def sim_auto_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     architecture applied to embeddings."""
     from pyspark_caffe_spark import vecops
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    emb = _ann_embeddings(spark, sf_dir)
     exact = (
         vecops.auto_threshold_pairs(emb, tau=0.4)
         .select("id_a", "id_b")
@@ -1590,866 +1481,6 @@ def pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.select("day", "event_type", "n_events", "sum_value")
 
 
-# ---------------------------------------------------------------------------
-# persisted IVF index: build ONCE as parquet, serve query batches from it
-# (round-9 verdict #3 — sim_knn_ivf_batch re-trained centroids and
-# re-assigned the corpus inside every query; real ANN serving amortizes
-# the index build across query batches)
-# ---------------------------------------------------------------------------
-
-#: shared IVF geometry for the persisted index.  nprobe/m follow the
-#: measured sim_knn_ivf_batch sweep: these near-uniform 64-d fixtures
-#: are the IVF worst case, and 16/10/3 is the narrowest setting where
-#: every query clears the 0.9-recall bar with margin.
-_ANN_NLIST, _ANN_NPROBE, _ANN_K, _ANN_M = 16, 10, 10, 3
-
-#: bumped whenever the on-disk index layout or geometry semantics
-#: change (postings schema, multi-assignment rule, centroid dtype…).
-#: The serve path REFUSES an index stamped with a different version —
-#: a scratch dir surviving a code upgrade must never silently serve
-#: stale geometry (round-9 verdict #4).
-_ANN_WRITER_VERSION = 3  # v3: meta gains the corpus fingerprint columns
-
-#: segment cap per manifest (round-15, closing the round-14 residual):
-#: every append commits one more segment line, and the serve path's
-#: union plan grows one leg per live segment — unbounded K between
-#: manual compacts meant a long ingest run could degrade every probe
-#: into a K-way union of tiny files.  ``_ann_append`` auto-triggers
-#: the crash-safe compaction swap once a commit would leave the live
-#: segment count AT the cap, so K never exceeds it and the amortized
-#: ingest cost stays O(|delta|·m) + O(|corpus|/cap) — the standard
-#: LSM folding bound.
-_ANN_MAX_SEGMENTS = 10
-
-
-class AnnConcurrentWriterError(RuntimeError):
-    """A second writer committed to the ANN manifest between this
-    writer's layout read and its commit.  The ANN store is
-    single-writer by contract; this fence turns a contract violation
-    into a loud failure at the COMMIT POINT (the loser's segment or
-    generation dir stays an invisible orphan, GC'd by the next
-    compact/build) instead of letting interleaved commits silently
-    drop the other writer's manifest lines — which would orphan
-    committed corpus data while the derived stamp still counted it
-    (permanent guarded-serve failure)."""
-
-
-#: manifest file naming the LIVE postings layout: the base generation
-#: directory plus the ordered live APPEND SEGMENTS (round-14, per the
-#: round-13 design note — segments replace in-place appends, removing
-#: the last fails-closed crash window in the lifecycle).  Every state
-#: change — compaction swap, segment append — commits by atomically
-#: replacing this one small file (``os.replace`` — atomic for files on
-#: the same POSIX filesystem), never by renaming postings directories
-#: themselves: a directory cannot be atomically renamed OVER a
-#: non-empty directory, so any dir-rename dance has a crash window
-#: with no readable index (the round-11 finding).
-#:
-#: Format, one entry per line: ``<dirname> [<n_delta> <fp_delta>]`` —
-#: line 1 is the base generation (its delta: corpus rows folded IN by
-#: compactions beyond the meta stamp), lines 2+ are live segments
-#: (their deltas: the appended slice's corpus fingerprint).  The
-#: effective corpus stamp is DERIVED — meta stamp + Σ manifest
-#: deltas — so no restamp write exists to tear.  A bare name (no
-#: delta fields) reads as delta 0, which keeps every pre-segment
-#: pointer file (and the base-layout no-file case ⇒ ``postings``,
-#: no segments) reading unchanged.
-_ANN_GEN_POINTER = "POSTINGS_GEN"
-
-#: default manifest when the file is absent or unparseable: the base
-#: build layout.  (gen_name, gen_n, gen_fp, segments) with segments =
-#: [(seg_name, n_delta, fp_delta), ...].
-_ANN_MANIFEST_BASE = ("postings", 0, 0, ())
-
-
-def _ann_manifest_read(root: str) -> tuple[str, int, int, tuple]:
-    """Parse the manifest under ``root``.  Defensive by contract: an
-    absent file, a torn/garbage line, or non-integer delta fields all
-    resolve to the base layout (``postings``, no segments) — the same
-    fallback chain the pre-segment pointer had, where the serve path's
-    existence check then fails loud with the rebuild route if base is
-    gone too.  Names are basename()-d AND rejected when "." / ".."
-    (which basename passes through — ".." would resolve to root's
-    parent) so a garbage pointer can never escape ``root``."""
-    try:
-        with open(os.path.join(root, _ANN_GEN_POINTER)) as f:
-            lines = [ln.strip() for ln in f.read().splitlines() if ln.strip()]
-    except (OSError, UnicodeDecodeError):
-        # UnicodeDecodeError (round-16, found by the parser fuzz
-        # test): a TORN write can leave partial multi-byte sequences —
-        # garbage content must fall back to the base layout like every
-        # other unparseable state, not crash the serve path
-        return _ANN_MANIFEST_BASE
-    if not lines:
-        return _ANN_MANIFEST_BASE
-    parsed = []
-    for ln in lines:
-        fields = ln.split()
-        name = os.path.basename(fields[0])
-        if not name or name in (".", ".."):
-            # round-17 (ADVICE): basename("..") == ".." — a garbage
-            # line of ".." survived the empty check and resolved the
-            # layout to root's PARENT (an always-existing dir), the
-            # exact escape the basename() contract claims to prevent.
-            # "." (resolving to root itself) is rejected for the same
-            # reason: no legitimate commit ever writes either.
-            return _ANN_MANIFEST_BASE
-        if len(fields) == 1:
-            parsed.append((name, 0, 0))
-        elif len(fields) == 3:
-            try:
-                parsed.append((name, int(fields[1]), int(fields[2])))
-            except ValueError:
-                return _ANN_MANIFEST_BASE
-        else:
-            return _ANN_MANIFEST_BASE
-    gen_name, gen_n, gen_fp = parsed[0]
-    return gen_name, gen_n, gen_fp, tuple(parsed[1:])
-
-
-@contextlib.contextmanager
-def _ann_commit_lock(root: str):
-    """Exclusive ``flock`` on the manifest's sidecar lock file — THE
-    mutual-exclusion point of every manifest mutation (fenced and
-    unconditional commits, and the reset's manifest/tmp cleanup).
-    One definition so every holder locks the same inode; the lock
-    file itself is never removed (see ``_ann_reset_generations``:
-    unlinking it would strand a current holder on a dead inode and
-    silently void the exclusion for the next writer).  Readers never
-    take it — the atomic manifest replace already serves them."""
-    import fcntl
-
-    lfd = os.open(
-        os.path.join(root, _ANN_GEN_POINTER + ".lock"),
-        os.O_RDWR | os.O_CREAT,
-        0o644,
-    )
-    try:
-        fcntl.flock(lfd, fcntl.LOCK_EX)
-        yield
-    finally:
-        os.close(lfd)  # closing the fd releases the flock
-
-
-def _ann_manifest_commit(
-    root: str,
-    gen: tuple[str, int, int],
-    segs: tuple | list,
-    expected: tuple | None = None,
-) -> None:
-    """THE commit point of every postings state change: fsync a temp
-    manifest file, then ``os.replace`` it over the live one — readers
-    see either the old layout or the new one, never neither.  The
-    containing DIRECTORY is fsynced after the replace: without it, a
-    power loss can persist a superseded generation's deletion (the
-    compaction caller GCs right after this returns) while the rename's
-    directory entry is still unwritten — the manifest would then name
-    a vanished dir and fall back to a base layout an earlier
-    compaction already removed (no servable index).  Process crashes
-    never reorder this way; only power/kernel loss does, and the dir
-    fsync closes exactly that window.
-
-    ``expected`` (round-15 writer fence): the manifest snapshot the
-    caller's mutation STARTED from.  When given, the commit re-reads
-    the live manifest under an exclusive ``flock`` on a sidecar lock
-    file and raises :class:`AnnConcurrentWriterError` if it no longer
-    matches — a compare-and-swap, so two interleaved writers cannot
-    both commit layouts derived from the same snapshot (the loser's
-    already-written dir stays an invisible orphan).  The lock spans
-    check + replace, closing the check-then-replace race between
-    fenced writers on the same filesystem; readers never take it (the
-    atomic replace already serves them).  ``None`` = unconditional
-    (fresh builds and the crash-walk entry point supersede every
-    prior layout by design) — but round-16 (ADVICE): unconditional
-    commits take the SAME flock.  The fence's safety story had a
-    hole otherwise: an unconditional writer racing a fenced one
-    skipped the lock, and both shared one tmp path (manifest +
-    '.tmp'), so their truncate/write could interleave on the same
-    inode and the ``os.replace`` install a mixed manifest (defensive
-    parsing degrades that to the base-layout fallback — wrong layout,
-    not corruption, but still wrong).  Closed twice over: every
-    commit serializes under the flock, AND each commit writes its
-    own ``mkstemp``-unique tmp, so even a writer that somehow isn't
-    holding the lock (an older binary, an external tool) cannot
-    share a tmp inode.  The unique tmp is unlinked on any failure
-    past its creation; torn tmps from a crashed process are swept by
-    ``_ann_reset_generations``."""
-    import tempfile
-
-    lines = [f"{gen[0]} {gen[1]} {gen[2]}"]
-    lines += [f"{name} {n} {fp}" for name, n, fp in segs]
-
-    with _ann_commit_lock(root):
-        if expected is not None:
-            live = _ann_manifest_read(root)
-            if live != tuple(expected):
-                raise AnnConcurrentWriterError(
-                    "ANN manifest changed between this writer's layout "
-                    f"read and its commit (read {tuple(expected)!r}, live "
-                    f"{live!r}) — a concurrent writer committed first; the "
-                    "ANN store is single-writer by contract.  This commit "
-                    "was NOT applied; re-run the append/compaction from a "
-                    "fresh layout read."
-                )
-        # fence check precedes tmp creation: a rejected commit leaves
-        # zero litter.  mkstemp AFTER the check, unique per commit.
-        tfd, tmp = tempfile.mkstemp(
-            dir=root, prefix=_ANN_GEN_POINTER + ".tmp."
-        )
-        try:
-            with os.fdopen(tfd, "w") as f:
-                # mkstemp creates 0600; the replace would narrow the
-                # LIVE manifest to owner-only and a co-reader process
-                # under another uid would hit PermissionError — which
-                # _ann_manifest_read's defensive except degrades to
-                # the BASE layout, silently dropping every committed
-                # segment.  Restore the pre-mkstemp world-readable
-                # mode before the replace.  Inside the try (round-17
-                # ADVICE): a failing fchmod must release the fd (the
-                # enclosing ``with``) and unlink the tmp (the except
-                # below) like every other post-creation failure —
-                # outside it, the fd leaked and the tmp stayed as
-                # litter.
-                os.fchmod(f.fileno(), 0o644)
-                f.write("\n".join(lines) + "\n")
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, os.path.join(root, _ANN_GEN_POINTER))
-        except BaseException:
-            with contextlib.suppress(OSError):
-                os.remove(tmp)
-            raise
-    try:
-        dfd = os.open(root, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-    except OSError as ex:
-        # non-fsyncable fs (some FUSE mounts): process-crash safety
-        # holds.  A REAL I/O failure (EIO) raises instead — the caller
-        # then skips the superseded-generation GC, so even if the
-        # rename's directory entry never persists, the old generation
-        # is still on disk and resolvable.
-        if ex.errno not in _FSYNC_UNSUPPORTED:
-            raise
-
-
-def _ann_base_path(root: str, manifest: tuple) -> str:
-    """The base-generation dir a parsed ``manifest`` names, with the
-    vanished-dir→``postings`` fallback the pointer always had — ONE
-    definition shared by the pointer-era resolver, the live-layout
-    walk, and the serve path's existence gate, so every consumer of a
-    given manifest SNAPSHOT derives the same base dir from it."""
-    cand = os.path.join(root, manifest[0])
-    if os.path.isdir(cand):
-        return cand
-    return os.path.join(root, "postings")
-
-
-def _ann_postings_current(root: str) -> str:
-    """Resolve the live BASE postings generation under ``root``: the
-    dir named by the manifest's first line if present on disk, else
-    the base ``postings`` dir.  A manifest naming a vanished dir
-    (manual deletion) falls back to base, where the serve path's
-    existence check fails loud with the rebuild route.  Segments are
-    resolved separately by ``_ann_live_paths`` — this keeps the
-    pre-segment callers (path plumbing, isdir gates) unchanged."""
-    return _ann_base_path(root, _ann_manifest_read(root))
-
-
-def _ann_live_paths(
-    root: str, manifest: tuple | None = None, require_base: bool = False
-) -> list[str]:
-    """Every live postings dir under ``root`` in manifest order: the
-    base generation plus the append segments.  The base generation
-    gets the same vanished-dir→base fallback the pointer always had —
-    EXCEPT under ``require_base=True`` (the compaction path, round-15
-    per the round-14 advisory): a compaction that silently folded the
-    stale ``postings`` fallback while carrying the manifest's folded
-    deltas forward would commit a derived stamp describing content the
-    rewrite does not hold, so there a manifest naming a vanished base
-    generation raises FileNotFoundError (rebuild route), mirroring the
-    vanished-segment contract below.  A manifest naming a VANISHED
-    SEGMENT always raises FileNotFoundError with the rebuild route — a
-    committed segment is part of the corpus, so silently serving
-    without it would drop appended vectors (fails loud, the reuse
-    gates route it to rebuild).  Callers that already parsed the
-    manifest pass it through, so one serve observes ONE layout
-    snapshot rather than re-reading mutable state per helper."""
-    manifest = manifest or _ann_manifest_read(root)
-    name, _n, _fp, segs = manifest
-    base = os.path.join(root, name)
-    if not os.path.isdir(base):
-        if require_base:
-            raise FileNotFoundError(
-                f"ANN base generation {name!r} named by the manifest is "
-                "missing on disk — compacting the stale 'postings' fallback "
-                "would commit a stamp the rewritten content does not match; "
-                "rebuild via sink_ann_index/_build_ann_index"
-            )
-        base = os.path.join(root, "postings")
-    paths = [base]
-    for seg_name, _sn, _sfp in segs:
-        seg = os.path.join(root, seg_name)
-        if not os.path.isdir(seg):
-            raise FileNotFoundError(
-                f"ANN index append segment {seg_name!r} named by the "
-                "manifest is missing on disk — rebuild via "
-                "sink_ann_index/_build_ann_index"
-            )
-        paths.append(seg)
-    return paths
-
-
-def _ann_max_dir_num(root: str, prefix: str) -> int:
-    """Highest ``<prefix><N>`` directory number present under ``root``
-    (0 when none) — the on-disk half of the orphan-collision rule
-    shared by the compaction swap (``postings_gen``) and the segment
-    append (``postings_seg``): new dirs number past everything on
-    disk, so a crash orphan can never collide with the next write."""
-    nums = [
-        int(n[len(prefix):])
-        for n in os.listdir(root)
-        if n.startswith(prefix) and n[len(prefix):].isdigit()
-    ]
-    return max(nums, default=0)
-
-
-def _ann_claim_dir(root: str, prefix: str, start_num: int) -> tuple[str, str]:
-    """Atomically claim a fresh ``<prefix><N>`` dir (N ≥ start_num):
-    ``os.mkdir`` succeeds for exactly one claimant per name, so two
-    concurrent writers that computed the same next number from the
-    same disk scan get DISTINCT dirs instead of clobbering each
-    other's parquet writes (round-16 — the manifest fence rejects the
-    loser's COMMIT, but only the claim keeps the winner's committed
-    dir untorn by the loser's concurrent write).  Callers write into
-    the claimed empty dir with mode("append"), never "overwrite"
-    (overwrite deletes + recreates the dir, voiding the claim for the
-    duration of the scan window).  A crashed claimant leaves an empty
-    orphan dir: invisible (no manifest line names it), numbered past
-    by later writers, GC'd by the next compact/build."""
-    num = start_num
-    while True:
-        name = f"{prefix}{num}"
-        path = os.path.join(root, name)
-        try:
-            os.mkdir(path)
-            return name, path
-        except FileExistsError:
-            num += 1
-
-
-def _ann_read_postings(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """One DataFrame over the live postings layout: a flat UNION of
-    the per-leg partition-discovered parquet scans.  Explicit unions
-    (not one multi-path read) because the legs are sibling partition
-    roots — Spark's multi-root discovery rejects that layout
-    (CONFLICTING_DIRECTORY_STRUCTURES) — and a union keeps every leg's
-    own partition pruning: a ``cell`` filter above the union pushes
-    into each scan, so nprobe-bounded reads stay corpus-sublinear.
-    K legs bounded by compaction cadence."""
-    from functools import reduce
-
-    return reduce(
-        DataFrame.unionByName, [spark.read.parquet(p) for p in paths]
-    )
-
-
-def _ann_effective_stamp(
-    root: str, meta, manifest: tuple | None = None
-) -> tuple[int, str, tuple]:
-    """The corpus stamp the live index ACTUALLY describes: the meta
-    stamp (written once at build time, never rewritten by appends)
-    plus the manifest deltas — the base generation's folded-in delta
-    and every live segment's.  Both fingerprint halves are additive
-    by construction ((count, Σ xxhash64(vec_id))), so the derivation
-    is exact.  Returns (corpus_n, corpus_fp, manifest) where manifest
-    is the parsed tuple — callers key the validation cache on it."""
-    name, gen_n, gen_fp, segs = manifest or _ann_manifest_read(root)
-    n = int(meta["corpus_n"]) + gen_n + sum(s[1] for s in segs)
-    fp = int(meta["corpus_fp"]) + gen_fp + sum(s[2] for s in segs)
-    return n, str(fp), (name, gen_n, gen_fp, segs)
-
-
-#: fsync errnos that mean "this filesystem cannot fsync", not "the
-#: write failed": EINVAL/ENOTSUP(=EOPNOTSUPP on Linux) from pipes,
-#: some FUSE mounts, and pre-ext4 tmpfs quirks.  Everything ELSE —
-#: above all EIO, a genuine write-back failure — must PROPAGATE: post
-#: fsyncgate, Linux clears the error state after reporting it once,
-#: so swallowing EIO here and flipping the pointer anyway would
-#: commit to a generation the kernel just said it could not persist
-#: (the exact no-servable-index scenario the fence exists to prevent).
-_FSYNC_UNSUPPORTED = tuple(
-    {
-        getattr(errno, name)
-        for name in ("EINVAL", "ENOTSUP", "EOPNOTSUPP")
-        if hasattr(errno, name)
-    }
-)
-
-
-def _fsync_tree(path: str) -> None:
-    """fsync every file AND directory under ``path`` (depth-first,
-    directories after their contents), THEN the parent directory, so
-    the tree's own directory ENTRY is durable too.  Called on a new
-    postings generation/segment BEFORE the manifest commit: without
-    the tree syncs, a power loss after the commit could persist the
-    manifest (its own write is fsynced) while the new data pages are
-    still unwritten; without the parent sync, the manifest could
-    persist while the generation dir's ENTRY in the root is still
-    unwritten (round-13 advisory) — either way the manifest would name
-    a torn/vanished dir after the old generation is GC'd.  Process
-    crashes never reorder this way (the page cache survives them);
-    only power/kernel loss does.
-
-    Only fsync-UNSUPPORTED errnos are swallowed (non-fsyncable FUSE
-    mounts — there the durability claim degrades to process-crash
-    safety); a real I/O failure (EIO) raises, so the caller aborts
-    BEFORE the commit and the old generation stays live."""
-    def _sync(p: str) -> None:
-        fd = os.open(p, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        except OSError as ex:
-            if ex.errno not in _FSYNC_UNSUPPORTED:
-                raise
-        finally:
-            os.close(fd)
-
-    for dirpath, _dirs, files in os.walk(path, topdown=False):
-        for name in files:
-            _sync(os.path.join(dirpath, name))
-        _sync(dirpath)
-    _sync(os.path.dirname(os.path.abspath(path)))
-
-
-def _ann_flip_pointer(root: str, name: str) -> None:
-    """Compaction's commit: a manifest naming ONLY ``name`` — the new
-    generation, zero segments, zero folded delta (callers that folded
-    segment deltas in commit via ``_ann_manifest_commit`` directly).
-    Kept as the crash-walk tests' entry point: the manifest IS the old
-    pointer, grown list fields."""
-    _ann_manifest_commit(root, (name, 0, 0), ())
-
-
-def _ann_reset_generations(root: str) -> None:
-    """A fresh build supersedes every compaction generation and append
-    segment: drop the manifest (FIRST — a crash mid-cleanup then
-    resolves to the base layout the build is about to overwrite, never
-    a dangling manifest) and any ``postings_gen*`` / ``postings_seg*``
-    dirs.  A crash inside the subsequent build leaves no valid index,
-    which the serve path reports loud with the rebuild route — the
-    same contract the in-place overwrite build always had.
-
-    Round-16 (ADVICE): the ``.lock`` sidecar is LEFT IN PLACE — it is
-    inert and zero-length, and unlinking it voided the fence: a
-    writer already holding the flock keeps the unlinked inode, so the
-    next writer would lock a FRESH inode and the two no longer
-    mutually exclude.  The manifest removal and the torn-tmp sweep
-    run UNDER the flock instead, so a reset can never unlink a live
-    commit's tmp mid-write (the mkstemp-unique tmps a crashed process
-    left behind are dead by definition once the lock is held)."""
-    import glob
-    import shutil
-
-    if not os.path.isdir(root):
-        return
-    with _ann_commit_lock(root):
-        # manifest FIRST (see docstring), then any torn mkstemp tmps
-        # from crashed commits (their writers are gone — we hold the
-        # lock every live commit writes under).  The .lock file
-        # itself is KEPT: removing it breaks flock mutual exclusion
-        # for any current holder.
-        with contextlib.suppress(OSError):
-            os.remove(os.path.join(root, _ANN_GEN_POINTER))
-        for tmp in glob.glob(
-            os.path.join(root, glob.escape(_ANN_GEN_POINTER) + ".tmp*")
-        ):
-            with contextlib.suppress(OSError):
-                os.remove(tmp)
-    for name in os.listdir(root):
-        if name.startswith(("postings_gen", "postings_seg")):
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-
-
-def _ann_root(sf_dir: str, suffix: str = "") -> str:
-    """Scratch root of the persisted index for this (sf tag, suffix) —
-    the static half of ``_ann_index_paths``, split out so callers that
-    need ONE manifest snapshot (the serve path) can resolve the root
-    without triggering the manifest read ``_ann_postings_current``
-    does."""
-    from pyspark_caffe_spark.queries.relational import _scratch
-
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf") + suffix
-    return _scratch(f"ann_index_{tag}")
-
-
-def _ann_index_paths(sf_dir: str, suffix: str = "") -> tuple[str, str, str]:
-    root = _ann_root(sf_dir, suffix)
-    return (
-        os.path.join(root, "centroids"),
-        _ann_postings_current(root),
-        os.path.join(root, "meta"),
-    )
-
-
-def _ann_fp_exprs() -> tuple[Column, Column]:
-    """The corpus-fingerprint aggregate pair — (row count, decimal sum
-    of xxhash64(vec_id)).  ONE definition shared by the direct scan
-    (:func:`_ann_corpus_fingerprint`, the reuse-path guard) and the
-    observe-folded variants (build/append stamp their fingerprint on
-    the SAME pass that writes the postings — round 18), so the stamp
-    recipe can never fork between the writer and the validator."""
-    return (
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.sum(F.xxhash64("vec_id").cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("fp"),
-    )
-
-
-def _ann_corpus_fingerprint(emb: DataFrame) -> tuple[int, str]:
-    """(row count, decimal sum of xxhash64(vec_id)) over the indexed
-    corpus — ONE scan of the thin vec_id column.  Stamped into meta at
-    build time so a reuse-path serve can detect that the dataset under
-    the same sf tag was REGENERATED or swapped since the index was
-    built (the geometry hash alone validates centroids, not corpus:
-    a stale-corpus index would otherwise serve vec_ids that no longer
-    exist)."""
-    row = emb.agg(*_ann_fp_exprs()).collect()[0]
-    return int(row["n"]), str(row["fp"])
-
-
-def _ann_read_small_table(path: str):
-    """Driver-local pyarrow read of a TINY index artifact — the one-row
-    meta stamp or the nlist-row centroid table (nlist is a build-time
-    constant, never corpus-sized, so a driver-local read is the right
-    design at every scale: FAISS likewise holds centroids in memory).
-    Replaces a full Spark job (scan + collect) per artifact per verb —
-    at sf0.1 each such job costs ~0.1-0.2 s of pure scheduling, and at
-    100 TB the serve path's latency floor should not include two
-    cluster round trips for <1 KB of metadata (round 18, guide §1.2).
-
-    Error contract preserved from the Spark-read version: an absent
-    path raises FileNotFoundError; ANY torn/garbage content raises
-    ValueError — both already in every reuse gate's caught tuple, so
-    the rebuild routes are unchanged (the Spark reads raised
-    AnalysisException/Py4JJavaError shapes that the gates matched via
-    _is_artifact_read_failure; pyarrow failures are artifact-shaped by
-    construction here because the inputs are local index files)."""
-    import pyarrow.parquet as pq
-
-    try:
-        return pq.read_table(path)
-    except (FileNotFoundError, MemoryError):
-        raise
-    except Exception as ex:  # ArrowInvalid, OSError subclasses, ...
-        raise ValueError(
-            f"unreadable ANN index artifact at {path} "
-            f"({type(ex).__name__}: {ex}) — torn or non-parquet content; "
-            "rebuild via sink_ann_index/_build_ann_index"
-        ) from ex
-
-
-def _ann_read_meta(mpath: str) -> dict:
-    """The one-row meta stamp as a plain dict (same key access pattern
-    as the Spark Row it replaces).  A meta with any other row count is
-    torn/corrupt and routes to rebuild (the old collect()[0] silently
-    took the first row of a multi-row meta — fails closed now)."""
-    rows = _ann_read_small_table(mpath).to_pylist()
-    if len(rows) != 1:
-        raise ValueError(
-            f"ANN meta at {mpath} holds {len(rows)} rows (exactly 1 "
-            "expected) — torn or mixed-version stamp; rebuild via "
-            "sink_ann_index/_build_ann_index"
-        )
-    return rows[0]
-
-
-def _ann_read_centroids(cpath: str) -> "np.ndarray":
-    """The centroid matrix, rows ordered by cell id — driver-local
-    pyarrow read (see :func:`_ann_read_small_table` for why and for
-    the error contract)."""
-    tbl = _ann_read_small_table(cpath)
-    try:
-        cells = tbl.column("cell").to_numpy()
-        vecs = tbl.column("centroid").to_pylist()
-    except KeyError as ex:
-        raise ValueError(
-            f"ANN centroids at {cpath} missing expected columns "
-            "(cell, centroid) — mixed-version index; rebuild via "
-            "sink_ann_index/_build_ann_index"
-        ) from ex
-    if len(vecs) == 0:
-        raise ValueError(
-            f"ANN centroids at {cpath} is empty — torn write; rebuild "
-            "via sink_ann_index/_build_ann_index"
-        )
-    order = np.argsort(cells)
-    return np.stack([np.asarray(vecs[i], dtype=np.float64) for i in order])
-
-
-def _ann_assign(df: DataFrame, centroids: "np.ndarray", m: int) -> DataFrame:
-    """Assign each (vec_id, emb) row to its top-m centroid cells —
-    ONE Arrow-batched corpus pass, shared by the initial index build
-    and the incremental refresh (the refresh MUST use the identical
-    assignment rule or appended vectors land in cells the probe math
-    won't look in)."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((centroids, m))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents, m_a = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            top_m = np.argsort(-(x @ cents.T), axis=1)[:, :m_a]
-            reps = np.repeat(np.arange(len(pdf)), m_a)
-            yield pd.DataFrame(
-                {
-                    "cell": top_m.reshape(-1).astype("int32"),
-                    "vec_id": np.repeat(ids, m_a),
-                    "emb": [x[i] for i in reps],
-                }
-            )
-
-    return df.mapInPandas(assign, schema="cell int, vec_id long, emb array<double>")
-
-
-def _ann_write_small_table(path: str, table) -> None:
-    """Driver-local pyarrow write of a TINY index artifact (the
-    one-row meta stamp, the nlist-row centroids) with Spark
-    ``mode("overwrite")`` directory semantics: remove the old dataset
-    dir, recreate it, write one ``part-00000.parquet`` data file.
-    Replaces a full Spark write job per artifact — createDataFrame +
-    FileFormatWriter costs ~0.3-0.6 s of pure scheduling/commit per
-    one-row table at sf0.1 (round-18 phase profile), and these tables
-    are O(1)/O(nlist) rows at EVERY corpus scale, so a driver-local
-    write is the right design at 100 TB too.  Crash contract is
-    unchanged from the Spark write: a tear mid-overwrite leaves an
-    absent or garbage artifact, which every gate routes to rebuild
-    (FileNotFoundError/ValueError).  Spark reads the produced dir
-    exactly as one it wrote (tests read meta/centroids with
-    spark.read.parquet); the data file is fsynced so the later
-    fsync-free manifest/commit ordering arguments keep holding."""
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    fpath = os.path.join(path, "part-00000.parquet")
-    pq.write_table(table, fpath)
-    fd = os.open(fpath, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    except OSError as ex:
-        if ex.errno not in _FSYNC_UNSUPPORTED:
-            raise
-    finally:
-        os.close(fd)
-
-
-def _ann_write_meta(
-    spark: SparkSession,
-    mpath: str,
-    writer_version: int,
-    nlist: int,
-    m: int,
-    dim: int,
-    geometry_hash: str,
-    corpus_n: int,
-    corpus_fp: str,
-) -> None:
-    """Write the one-row meta stamp (shared by the initial build and
-    the incremental refresh, so the stamp schema can never fork).
-    Column types mirror the original Spark schema exactly
-    (writer_version int, nlist int, m int, dim int, geometry_hash
-    string, corpus_n long, corpus_fp string)."""
-    import pyarrow as pa
-
-    table = pa.table(
-        {
-            "writer_version": pa.array([int(writer_version)], pa.int32()),
-            "nlist": pa.array([int(nlist)], pa.int32()),
-            "m": pa.array([int(m)], pa.int32()),
-            "dim": pa.array([int(dim)], pa.int32()),
-            "geometry_hash": pa.array([geometry_hash], pa.string()),
-            "corpus_n": pa.array([int(corpus_n)], pa.int64()),
-            "corpus_fp": pa.array([str(corpus_fp)], pa.string()),
-        }
-    )
-    _ann_write_small_table(mpath, table)
-
-
-def _path_sig(path: str) -> tuple | None:
-    """Cheap filesystem identity of a parquet file/dir: (relpath,
-    size, mtime_ns, inode) per file, RECURSIVE — an O(#files) stat
-    walk, no data read.  Any rewrite, append, or dataset regeneration
-    changes it, including one confined to a partition subdirectory.
-    The inode is included because some network/FUSE mounts truncate
-    mtime to whole seconds: an in-place regeneration producing
-    same-named same-sized files within one timestamp tick would
-    otherwise collide, and new files virtually always get new inodes
-    (round-11 advice).  Residual risk — same tick AND recycled inode
-    AND identical size — is accepted for local scratch dirs.  The
-    converse risk is perf-only, never correctness: on overlayfs
-    (copy-up migrates a file to the upper layer with a new inode) or a
-    backup-restored filesystem, st_ino can change under IDENTICAL
-    content, which merely invalidates the validation cache and re-runs
-    the corpus fingerprint scan — extra validation, never a missed
-    drift.
-
-    Returns ``None`` when the path is not statable by the local os
-    module (absent, or a non-filesystem URI like an object-store
-    path): the caller must treat None as "identity unknown" and skip
-    CACHING, never as a stable signature — a constant sentinel here
-    would make the dataset-generation half of the validation cache
-    key inert and let a regenerated corpus serve from cache (round-11
-    review finding)."""
-    if not os.path.exists(path):
-        return None
-    if os.path.isdir(path):
-        entries = []
-        for root, dirs, files in os.walk(path):
-            dirs.sort()
-            rel = os.path.relpath(root, path)
-            for name in sorted(files):
-                try:
-                    st = os.stat(os.path.join(root, name))
-                    entries.append(
-                        (os.path.join(rel, name), st.st_size, st.st_mtime_ns, st.st_ino)
-                    )
-                except OSError:
-                    entries.append((os.path.join(rel, name), -1, -1, -1))
-        return ("dir", tuple(entries))
-    st = os.stat(path)
-    return ("file", st.st_size, st.st_mtime_ns, st.st_ino)
-
-
-#: successful corpus-fingerprint validations, keyed by (meta path, meta
-#: dir signature, embeddings source signature, stamp fields).  A serve
-#: against an UNCHANGED (index, dataset) pair skips the O(corpus)
-#: vec_id fingerprint scan (round-10 verdict #4: the guard is
-#: correctness-critical on first contact with an index generation, but
-#: re-scanning the corpus on EVERY serve contradicted the
-#: corpus-sublinear serve contract).  The key embeds the stat
-#: signature of BOTH the meta dir and the embeddings source, so a
-#: rebuilt index OR a regenerated dataset is a cache miss and gets the
-#: full scan + refusal path — the cache only ever skips work that
-#: would re-prove an already-proven pair.
-_ANN_VALIDATED: dict[tuple, bool] = {}
-
-
-def _ann_geometry_hash(centroids: "np.ndarray") -> str:
-    """Deterministic fingerprint of the centroid matrix: any drift
-    between the meta stamp and the centroid table (partial rewrite,
-    mixed-version dirs) breaks the serve-path check."""
-    import hashlib
-
-    return hashlib.sha256(
-        np.ascontiguousarray(np.round(centroids, 12), dtype=np.float64).tobytes()
-    ).hexdigest()
-
-
-def _build_ann_index(
-    spark: SparkSession,
-    sf_dir: str,
-    corpus_filter: Column | None = None,
-    suffix: str = "",
-) -> tuple[int, int, str, str]:
-    """Build and PERSIST the IVF index: a centroids table (nlist tiny
-    rows) and a postings table — every corpus vector stored under its
-    top-m cells — written ``partitionBy("cell")`` so a probe is a
-    PARTITION-PRUNED scan of nprobe directories, not a corpus scan.
-
-    The build is one bounded driver-side Lloyd (≤4096-row hash sample,
-    the FAISS recipe) plus ONE corpus pass for assignment; the m×
-    postings blow-up is the standard IVF storage trade (FAISS stores
-    vectors inside the inverted lists for the same reason: the serve
-    path then never touches the base table).  ``corpus_filter``
-    restricts the indexed corpus (sim_knn_ivf_refresh builds its base
-    index without the delta slice); ``suffix`` namespaces the on-disk
-    index so variant indexes never shadow the default one.  Returns
-    ``(nlist, m, centroids_path, postings_path)``."""
-    nlist, m = _ANN_NLIST, _ANN_M
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    if corpus_filter is not None:
-        emb = emb.filter(corpus_filter)
-    train = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(2)) == 0)
-        .orderBy("vec_id").limit(4096).collect()
-    )
-    sample = np.stack([np.array(r["emb"]) for r in train])
-    if len(sample) < nlist:
-        nlist = max(1, len(sample))
-    m = min(m, nlist)
-    centroids = _lloyd_spherical(sample, nlist, iters=10)
-    cpath, _resolved, mpath = _ann_index_paths(sf_dir, suffix)
-    # a build starts a new index: retire every compaction generation
-    # and write the base layout (resolution after the reset is always
-    # root/postings)
-    root = os.path.dirname(mpath)
-    _ann_reset_generations(root)
-    ppath = os.path.join(root, "postings")
-    # driver-local centroid write (nlist tiny rows — see
-    # _ann_write_small_table for why; same "cell int, centroid
-    # array<double>" schema the Spark write produced)
-    import pyarrow as pa
-
-    _ann_write_small_table(
-        cpath,
-        pa.table(
-            {
-                "cell": pa.array(list(range(nlist)), pa.int32()),
-                "centroid": pa.array(
-                    [centroids[i].tolist() for i in range(nlist)],
-                    pa.list_(pa.float64()),
-                ),
-            }
-        ),
-    )
-
-    # The corpus fingerprint rides the assignment pass via observe():
-    # the stamp aggregates (_ann_fp_exprs — identical expressions to
-    # the reuse-path guard's scan) are computed over the SAME rows the
-    # postings write consumes, which removes the build's separate
-    # full-corpus fingerprint job outright (guide §1.2: one fewer pass
-    # — 3 corpus passes → 2; round 18).  Safe because nothing between
-    # the CollectMetrics node and the write filters rows (a downstream
-    # filter/limit WOULD corrupt the metric — measured on a prototype,
-    # so the train sample above deliberately keeps its own job).
-    obs = Observation()
-    (
-        _ann_assign(emb.observe(obs, *_ann_fp_exprs()), centroids, m)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(ppath)
-    )
-    # version stamp LAST — a crash between postings and meta leaves no
-    # meta, which the serve path treats as "not a valid index" (same
-    # raise-with-route as an absent index)
-    vals = obs.get
-    corpus_n, corpus_fp = int(vals["n"]), str(vals["fp"])
-    _ann_write_meta(
-        spark,
-        mpath,
-        _ANN_WRITER_VERSION,
-        nlist,
-        m,
-        centroids.shape[1],
-        _ann_geometry_hash(centroids),
-        corpus_n,
-        corpus_fp,
-    )
-    return nlist, m, cpath, ppath
-
 
 @query(
     "sink_ann_index",
@@ -2588,31 +1619,21 @@ def sim_knn_ivf_serve_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates at fixture scale, so a short list means the serve path
     dropped candidates (bad pruning, broken dedup) and breaks the
     hash."""
-    try:
+
+    def serve() -> DataFrame:
         # THE reuse path, so corpus validation is on: a persisted index
         # whose geometry still validates but whose DATASET was
         # regenerated under the same tag must rebuild, not serve
         # phantom vec_ids (round-10 review finding)
-        served = _serve_from_ann_index(
+        return _serve_from_ann_index(
             spark, sf_dir, with_recall=False, validate_corpus=True
         )
-    except (FileNotFoundError, ValueError) + _SPARK_READ_ERRORS as ex:
-        # _SPARK_READ_ERRORS: a TORN meta/centroids parquet (crash
-        # mid-write) raises AnalysisException/Py4JJavaError from the
-        # serve path's reads — same rebuild route as absent/stale/
-        # drifted (the round-12 advisory finding on compact_only's
-        # gate applies to this one identically).  Artifact-shaped
-        # failures only: a transient JVM error inside the serve jobs
-        # must propagate, not silently turn this PURE-SERVE product
-        # metric into serve+build.
-        if not isinstance(
-            ex, (FileNotFoundError, ValueError)
-        ) and not _is_artifact_read_failure(ex):
-            raise
+
+    def rebuild() -> DataFrame:
         _build_ann_index(spark, sf_dir)
-        served = _serve_from_ann_index(
-            spark, sf_dir, with_recall=False, validate_corpus=True
-        )
+        return serve()
+
+    served = _ann_reuse_or_rebuild(serve, rebuild)
     return served.groupBy("qid").agg(F.count("*").alias("n_results"))
 
 
@@ -2665,19 +1686,13 @@ def sim_knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_pred = F.pmod(F.col("vec_id"), F.lit(10)) == 7
     suffix = "_refresh"
     _build_ann_index(spark, sf_dir, corpus_filter=~delta_pred, suffix=suffix)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    emb = _ann_embeddings(spark, sf_dir)
     # ONE query-matrix collect for both serves (round 19, guide §1.2):
     # the batch is the same deterministic hash slice in both, and
     # identical probe sets are exactly what the before/after comparison
     # requires — so the second collect job was a byte-identical rerun
     qids, qmat, _ = vecops._collect_matrix(
-        emb.filter(
-            (F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)
-        ),
-        "vec_id",
-        "emb",
+        emb.filter(_ann_query_pred()), "vec_id", "emb"
     )
     q = (qids, qmat)
     before = (
@@ -2705,430 +1720,6 @@ def sim_knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "best_cos_not_worse"
         ),
     )
-
-
-def _ann_append(spark: SparkSession, sf_dir: str, suffix: str, delta: DataFrame) -> None:
-    """Frozen-geometry SEGMENT append — the shared ingest step of the
-    ANN lifecycle (sim_knn_ivf_refresh's daily delta,
-    sink_ann_index_compact's multi-day setup): assign the delta under
-    the index's OWN stamped geometry (same centroids, same top-m rule
-    via the shared ``_ann_assign``), write it as a NEW immutable
-    ``postings_seg<N>`` dir in the same ``partitionBy("cell")``
-    layout, fsync it, and COMMIT by atomically extending the manifest
-    with the segment's name + corpus-fingerprint delta (one thin scan
-    of the DELTA only — the fingerprint is (count, Σ xxhash64(vec_id)),
-    so the effective stamp derives exactly as base + Σ deltas).
-    O(|delta|·m) write cost, never O(|corpus|) — and no read-modify of
-    live dirs, so at 100 TB there is no per-cell small-append
-    amplification either.
-
-    Crash safety (round-14, per the round-13 design note — this
-    REPLACED the in-place append, whose postings-then-restamp ordering
-    had the lifecycle's one fails-closed window): a crash at ANY point
-    leaves a servable, TRUTHFUL index.  Before the manifest commit the
-    new segment is an orphan dir no manifest names — invisible to
-    serves, GC'd by the next compact/build; after the commit the
-    segment and its stamp delta become visible together, atomically.
-    Meta is never rewritten, so no restamp write exists to tear.
-    Segment numbers come from existing dirs on disk (orphans
-    included), so a crash orphan can never collide with the next
-    append's target.  One extra (harmless) orphan shape since the
-    round-18 observe fold: an EMPTY delta is detected only after the
-    claimed segment dir exists, so a crash between the zero-row write
-    and the cleanup rmtree can leave an empty orphan dir — manifest-
-    invisible like the torn-segment orphan, GC'd by the next
-    compact/build, and skipped by the numbering above."""
-    import shutil
-
-    cpath, _ppath, mpath = _ann_index_paths(sf_dir, suffix)
-    root = os.path.dirname(mpath)
-    meta = _ann_read_meta(mpath)
-    centroids = _ann_read_centroids(cpath)
-    manifest = _ann_manifest_read(root)
-    gen_name, gen_n, gen_fp, segs = manifest
-    # next segment number = past everything on disk (crash orphans)
-    # AND everything the manifest names (a committed segment whose dir
-    # was manually deleted — reusing its name would duplicate the
-    # manifest line, double-counting its stale delta; round-14
-    # self-review finding).  The deleted segment itself stays the
-    # fail-loud _ann_live_paths case.
-    named = [
-        int(s[0][len("postings_seg"):])
-        for s in segs
-        if s[0].startswith("postings_seg")
-        and s[0][len("postings_seg"):].isdigit()
-    ]
-    next_num = max([_ann_max_dir_num(root, "postings_seg"), *named]) + 1
-    # round-16: CLAIM the segment dir atomically (os.mkdir) before the
-    # Spark write.  Two concurrent appends both compute next_num from
-    # the same disk scan; without the claim they would write the SAME
-    # dir and clobber each other's parquet files — the manifest fence
-    # would still reject one COMMIT, but the winner's committed line
-    # could name a dir torn by the loser's concurrent overwrite.  The
-    # claim gives each writer a distinct dir, so the fence's orphan
-    # story holds exactly: the loser's fully-written segment stays an
-    # invisible orphan.  The write is mode("append") into the freshly
-    # claimed EMPTY dir (identical result; "overwrite" would delete
-    # and recreate the dir, voiding the claim for the scan window).
-    seg_name, seg_dir = _ann_claim_dir(root, "postings_seg", next_num)
-    # The delta fingerprint rides the assignment pass via observe()
-    # (same fold as the build — _ann_fp_exprs, identical expressions to
-    # the reuse-path guard's scan), removing the separate thin delta
-    # scan: 2 delta passes → 1 (round 18, guide §1.2).
-    obs = Observation()
-    (
-        _ann_assign(delta.observe(obs, *_ann_fp_exprs()), centroids, int(meta["m"]))
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(seg_dir)
-    )
-    vals = obs.get
-    d_n, d_fp = int(vals["n"]), int(vals["fp"])
-    # an EMPTY delta must be a no-op (round-14): a zero-row partitionBy
-    # write emits a dir with no data files, and a committed manifest
-    # line naming it would poison every later read with
-    # UNABLE_TO_INFER_SCHEMA.  The count now comes from the observe on
-    # the write pass itself, so the empty case is detected AFTER the
-    # (empty) claimed dir exists — remove it, leaving the layout
-    # byte-identical to "never appended" (no manifest line either way;
-    # pinned by test_ann_append_empty_delta_is_noop).
-    if d_n == 0:
-        shutil.rmtree(seg_dir, ignore_errors=True)
-        return
-    # durability fence BEFORE the commit (files + dirs + the segment's
-    # entry in root): the manifest must never name a torn segment
-    _fsync_tree(seg_dir)
-    # fenced on the snapshot this append extended: a concurrent writer
-    # committing in between fails THIS commit loudly (the fresh segment
-    # stays an invisible orphan) instead of dropping the other writer's
-    # manifest lines
-    _ann_manifest_commit(
-        root,
-        (gen_name, gen_n, gen_fp),
-        tuple(segs) + ((seg_name, d_n, int(d_fp)),),
-        expected=manifest,
-    )
-    # segment-cap auto-compact (round-15): the commit above made the
-    # appended data durable and servable — K live segments now; once K
-    # reaches the cap, fold the layout back to one generation so the
-    # serve union never grows past _ANN_MAX_SEGMENTS legs between
-    # manual compacts.  Runs AFTER the append's own commit, so a crash
-    # (or failure) anywhere inside the compaction leaves the appended
-    # segment live and the index servable + truthful — compaction's
-    # own crash contract.  A compaction failure PROPAGATES (LSM-style
-    # ingest stall): the append itself is already committed, but
-    # silently skipping maintenance would let K grow unbounded again.
-    if len(segs) + 1 >= _ANN_MAX_SEGMENTS:
-        _ann_compact_postings(spark, os.path.join(root, gen_name))
-
-
-def _count_part_files(path: str) -> int:
-    """Data files under a parquet dataset dir (commit markers and
-    hidden files excluded) — the small-files metric compaction acts
-    on."""
-    n = 0
-    for root, _dirs, files in os.walk(path):
-        for name in files:
-            if name.endswith(".parquet") and not name.startswith((".", "_")):
-                n += 1
-    return n
-
-
-def _ann_check_geometry(cpath: str, meta) -> "np.ndarray":
-    """Centroids-vs-stamp consistency check, shared by the serve path
-    and the maintenance verbs' reuse gates: read the (nlist tiny rows)
-    centroid table — driver-local, see :func:`_ann_read_small_table` —
-    and raise ValueError — with the rebuild route — if it does not
-    match the meta stamp (a crash remnant where the build overwrote
-    centroids but not yet postings/meta, or any other mixed-version
-    dir).  Returns the validated centroid matrix."""
-    centroids = _ann_read_centroids(cpath)
-    if (
-        len(centroids) != meta["nlist"]
-        or centroids.shape[1] != meta["dim"]
-        or _ann_geometry_hash(centroids) != meta["geometry_hash"]
-        or meta["m"] != min(_ANN_M, meta["nlist"])
-    ):
-        raise ValueError(
-            "ANN index geometry drift: the centroids table does not match "
-            f"the meta stamp (nlist={meta['nlist']}, dim={meta['dim']}, "
-            f"m={meta['m']}) — mixed-version or partially rewritten index; "
-            "rebuild via sink_ann_index/_build_ann_index"
-        )
-    return centroids
-
-
-def _ann_validate_corpus(
-    sf_dir: str, mpath: str, meta, emb: DataFrame, manifest: tuple | None = None
-) -> None:
-    """Reuse-path corpus guard, shared by the serve path and the
-    maintenance verbs: geometry validation alone cannot tell that the
-    DATASET under this sf tag was regenerated/swapped since the index
-    was built — recompute the corpus fingerprint (one column-pruned
-    scan of vec_id, corpus-thin by design) and compare to the
-    EFFECTIVE stamp (meta + manifest deltas — appends commit their
-    fingerprint delta through the manifest, never by rewriting meta);
-    raise ValueError (with the rebuild route) on drift.  The scan is
-    cached per (index generation, dataset generation): repeated calls
-    on an unchanged pair skip it (the steady-state serve is then
-    guard-free), while any meta rewrite, MANIFEST COMMIT (append — the
-    cache key embeds the parsed manifest, round-13 design note), or
-    dataset regeneration forces a fresh scan.  Pure compactions fold
-    deltas without changing their sum; the resulting cache miss re-runs
-    one thin scan, never a wrong acceptance.  The manifest enters the
-    key by parsed CONTENT, not stat signature: content is exactly what
-    the derived stamp depends on, and it keeps an absent manifest
-    (fresh build) cacheable."""
-    root = os.path.dirname(mpath)
-    eff_n, eff_fp, manifest = _ann_effective_stamp(root, meta, manifest)
-    meta_sig = _path_sig(mpath)
-    emb_sig = _path_sig(f"{sf_dir}/embeddings.parquet")
-    cache_key = (
-        mpath,
-        meta_sig,
-        emb_sig,
-        manifest,
-        int(meta["writer_version"]),
-        meta["geometry_hash"],
-        eff_n,
-        eff_fp,
-    )
-    # a None signature means the local os module cannot establish
-    # the artifact's identity (object-store URI, vanished path):
-    # the guard then runs on EVERY call — cache only provable
-    # identities, never a degraded sentinel
-    cacheable = meta_sig is not None and emb_sig is not None
-    if not (cacheable and _ANN_VALIDATED.get(cache_key)):
-        cur_n, cur_fp = _ann_corpus_fingerprint(emb)
-        if cur_n != eff_n or cur_fp != eff_fp:
-            raise ValueError(
-                "ANN index corpus drift: the embeddings table "
-                f"(n={cur_n}) no longer matches the corpus the index "
-                f"describes (n={eff_n}) — the dataset was regenerated "
-                "or swapped under the same tag; rebuild via "
-                "sink_ann_index/_build_ann_index"
-            )
-        if cacheable:
-            if len(_ANN_VALIDATED) > 64:  # bounded: stale keys dangle
-                _ANN_VALIDATED.clear()
-            _ANN_VALIDATED[cache_key] = True
-
-
-def _ann_posting_row_hash() -> Column:
-    """The per-posting content-hash term of the compaction identity
-    proof — ONE definition shared by the before-snapshot (observe on
-    the rewrite's own read, round 18) and the after-audit aggregate,
-    so the two sides of ``content_identical`` can never diverge."""
-    return F.xxhash64("cell", "vec_id", "emb").cast("decimal(38,0)")
-
-
-def _ann_compact_postings(
-    spark: SparkSession, ppath: str, identity_out: dict | None = None
-) -> str:
-    """The crash-safe compaction swap, shared by sink_ann_index_compact
-    and the crash-window tests: rewrite the live postings layout —
-    base generation PLUS every live append segment — one-file-per-cell
-    into a NEW generation dir, COMMIT via the atomic manifest replace
-    (naming only the new generation, its folded-in corpus delta
-    carried forward so the derived stamp is unchanged), then
-    garbage-collect every superseded postings dir (the ones just
-    folded and any orphans from crashed earlier compactions or
-    appends).  Returns the new live postings path.
-
-    Crash at any point leaves a servable index: before the commit the
-    old layout is still the resolved one; after it the new one is.
-    The generation number is 1 + max over EXISTING gen dirs (not the
-    live dir's number), so a crash orphan can never collide with the
-    next write-aside target."""
-    import shutil
-
-    root = os.path.dirname(ppath)
-    manifest = _ann_manifest_read(root)
-    # require_base (round-15, per the round-14 advisory): a vanished
-    # base GENERATION fails loud here instead of silently folding the
-    # stale 'postings' fallback under the manifest's carried deltas —
-    # the committed stamp must describe the rewritten content
-    live = _ann_live_paths(root, manifest, require_base=True)
-    _gname, gen_n, gen_fp, segs = manifest
-    # atomic dir claim (round-16): two concurrent compactions — or a
-    # compaction racing the crash-walk — get distinct generation dirs
-    # instead of interleaving parquet writes in one (the fence rejects
-    # the loser's commit; the claim keeps the winner's dir untorn)
-    new_name, rewrite = _ann_claim_dir(
-        root, "postings_gen", _ann_max_dir_num(root, "postings_gen") + 1
-    )
-    # identity_out: the caller wants the (count, Σ row-hash) identity
-    # of the folded content — observe it on the rewrite's OWN read so
-    # the proof's before-snapshot no longer costs a separate full
-    # postings scan (2 postings passes → 1 per compaction; round 18,
-    # guide §1.2).  The observe sits below the repartition exchange,
-    # so every row the rewrite consumes is counted exactly once.
-    src = _ann_read_postings(spark, live)
-    obs: Observation | None = None
-    if identity_out is not None:
-        obs = Observation()
-        src = src.observe(
-            obs,
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(_ann_posting_row_hash()), F.lit(0).cast("decimal(38,0)")
-            ).alias("h"),
-        )
-    (
-        src
-        .repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(rewrite)
-    )
-    if identity_out is not None and obs is not None:
-        vals = obs.get
-        n_seen, h_seen = int(vals["n"]), int(vals["h"])
-        # Cross-check the observed count against the manifest-derived
-        # expectation (round 19, closing the r18 advisory pair): the
-        # observe sits in the shuffle-map stage, where — on a
-        # multi-node cluster — a fetch-failure stage retry or a
-        # speculative duplicate re-applies accumulator updates and can
-        # overcount; symmetrically, a short read of the live layout
-        # would undercount and the old independent pre-scan could have
-        # caught it by disagreeing.  The committed layout's posting
-        # count is known WITHOUT a scan: every vector carries exactly
-        # meta["m"] postings (the coverage invariant the build/append
-        # writers enforce and sink_ann_index audits), so expected =
-        # (gen_n + Σ segment_n) · m.  On mismatch, fall back to a
-        # dedicated snapshot scan of the old live layout — still
-        # intact, GC runs only after the commit below — instead of
-        # recording a poisoned before-identity.  On this single-node
-        # target the branch never fires; it exists so the proof stays
-        # sound under task re-execution at cluster scale.
-        expected_n = (gen_n + sum(s[1] for s in segs)) * int(
-            _ann_read_meta(os.path.join(root, "meta"))["m"]
-        )
-        if n_seen != expected_n:
-            snap = (
-                _ann_read_postings(spark, live)
-                .agg(
-                    F.count("*").alias("n"),
-                    F.coalesce(
-                        F.sum(_ann_posting_row_hash()),
-                        F.lit(0).cast("decimal(38,0)"),
-                    ).alias("h"),
-                )
-                .collect()[0]
-            )
-            n_seen, h_seen = int(snap["n"]), int(snap["h"])
-        identity_out["n"] = n_seen
-        identity_out["h"] = h_seen
-    # durability fence BEFORE the commit point: the manifest's own
-    # fsyncs cover the manifest, not the generation it names — under
-    # power loss an unfsynced new generation could tear while the
-    # committed manifest persists and the old layout is GC'd below
-    # (the round-12 advisory finding; _fsync_tree also syncs the
-    # generation's entry in root, the round-13 one)
-    _fsync_tree(rewrite)
-    # COMMIT — everything before this line is invisible to serves.
-    # The folded segments' stamp deltas move onto the generation line
-    # in the same atomic replace, so the derived stamp never wavers.
-    folded_n = gen_n + sum(s[1] for s in segs)
-    folded_fp = gen_fp + sum(s[2] for s in segs)
-    # fenced on the layout snapshot this rewrite FOLDED: a concurrent
-    # append committing mid-rewrite would otherwise have its segment
-    # line silently dropped by this replace (orphaned committed data)
-    _ann_manifest_commit(
-        root, (new_name, folded_n, folded_fp), (), expected=manifest
-    )
-    for name in os.listdir(root):
-        if (
-            name == "postings" or name.startswith(("postings_gen", "postings_seg"))
-        ) and name != new_name:
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-    # steady-state sweep of crash-orphaned commit tmps (round-16
-    # self-review): mkstemp-unique tmps from a SIGKILL'd commit would
-    # otherwise accumulate one file per crash on an index that is only
-    # ever appended/compacted, never rebuilt (reset is the only other
-    # sweeper).  Under the commit lock, so a LIVE commit's tmp is
-    # never unlinked mid-write — any tmp visible while we hold the
-    # lock belongs to a dead writer.
-    with _ann_commit_lock(root):
-        for name in os.listdir(root):
-            if name.startswith(_ANN_GEN_POINTER + ".tmp"):
-                with contextlib.suppress(OSError):
-                    os.remove(os.path.join(root, name))
-    return rewrite
-
-
-def _ann_lay_ingest_history(spark: SparkSession, sf_dir: str, suffix: str) -> None:
-    """Simulate the real multi-day ingest history both compaction verbs
-    start from: base index built EXCLUDING two ~10% slices, which then
-    arrive as two separate ``_ann_append`` days — leaving a base
-    generation plus two live append segments (three layout legs)."""
-    d1 = F.pmod(F.col("vec_id"), F.lit(10)) == 3
-    d2 = F.pmod(F.col("vec_id"), F.lit(10)) == 7
-    _build_ann_index(spark, sf_dir, corpus_filter=~(d1 | d2), suffix=suffix)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    _ann_append(spark, sf_dir, suffix, emb.filter(d1))
-    _ann_append(spark, sf_dir, suffix, emb.filter(d2))
-
-
-def _ann_compact_and_prove(
-    spark: SparkSession,
-    ppath: str,
-    mpath: str,
-    with_files_collapsed: bool,
-) -> DataFrame:
-    """Shared proof block of both compaction verbs: snapshot the live
-    postings' (count, decimal Σ xxhash64) identity — across the base
-    generation AND every live append segment — run the crash-safe
-    swap, and emit the audit row over the swapped-in files: content
-    identity, stamp validity (against the DERIVED stamp: meta +
-    manifest deltas), and (full verb only) the strict file collapse.
-    One definition so the identity proof can never diverge between
-    the bundled and amortized keys."""
-    root = os.path.dirname(ppath)
-    # same require_base contract as the swap itself: the before-
-    # snapshot must never hash the stale 'postings' fallback
-    live_before = _ann_live_paths(root, require_base=True)
-    files_before = sum(_count_part_files(p) for p in live_before)
-    # before-identity rides the swap's own read of the live layout
-    # (observe inside _ann_compact_postings — round 18): the proof now
-    # hashes exactly the bytes the rewrite consumed, and the separate
-    # full-postings snapshot scan is gone (2 passes → 1).  Scope note
-    # (r18 advisory): content_identical therefore proves WRITE
-    # FIDELITY — a short/stale read of the live layout is what the
-    # manifest cross-check inside _ann_compact_postings guards
-    # (observed count vs (gen_n + Σ seg_n)·m, with a dedicated
-    # snapshot-scan fallback on mismatch); a genuinely lost VECTOR is
-    # still caught by stamp_still_valid below (countDistinct vs the
-    # derived stamp).
-    before: dict = {}
-    ppath = _ann_compact_postings(spark, ppath, identity_out=before)
-    files_after = _count_part_files(ppath)
-
-    row_hash = _ann_posting_row_hash()
-    meta = _ann_read_meta(mpath)
-    eff_n, _eff_fp, _manifest = _ann_effective_stamp(root, meta)
-    compacted = spark.read.parquet(ppath)
-    cols = [
-        F.countDistinct("vec_id").alias("n_vectors"),
-        F.count("*").alias("n_postings"),
-        (
-            (F.count("*") == F.lit(int(before["n"])))
-            & (
-                F.coalesce(F.sum(row_hash), F.lit(0).cast("decimal(38,0)"))
-                == F.lit(str(before["h"])).cast("decimal(38,0)")
-            )
-        ).alias("content_identical"),
-    ]
-    if with_files_collapsed:
-        cols.append(F.lit(files_after < files_before).alias("files_collapsed"))
-    cols.append(
-        (F.countDistinct("vec_id") == F.lit(int(eff_n))).alias(
-            "stamp_still_valid"
-        )
-    )
-    return compacted.agg(*cols)
 
 
 @query(
@@ -3185,8 +1776,7 @@ def sink_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     append segments before compaction."""
     suffix = "_compact"
     _ann_lay_ingest_history(spark, sf_dir, suffix)
-    _, ppath, mpath = _ann_index_paths(sf_dir, suffix)
-    return _ann_compact_and_prove(spark, ppath, mpath, with_files_collapsed=True)
+    return _ann_compact_and_prove(spark, sf_dir, suffix, with_files_collapsed=True)
 
 
 @query(
@@ -3208,19 +1798,20 @@ def sink_ann_index_compact_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve).
 
     Reuses the PERSISTED ``_compact`` index when it FULLY validates:
-    writer version, geometry (``_ann_check_geometry`` — the same
-    centroids-vs-stamp check every serve runs, so a crash remnant
-    where a rebuild overwrote centroids but not yet postings/meta can
-    never be compacted and reported green), and corpus fingerprint
-    (the cached ``_ann_validate_corpus`` guard — compaction never
-    touches meta, so the validation cache survives every rewrite).
-    Rebuilds the full ingest history only when any gate fails
-    (absent/stale/drifted index — the standalone correctness-sweep
-    case).  In the bench suite, where sink_ann_index_compact runs
-    first, this key times exactly: one postings read +
-    ``repartition("cell")`` rewrite into the next generation + atomic
-    pointer flip + superseded-dir GC + the in-plan content-identity
-    proof.  Nothing else.
+    existence, writer version and geometry (``_ann_open`` — the same
+    open-and-validate every serve runs, so a crash remnant where a
+    rebuild overwrote centroids but not yet postings/meta can never
+    be compacted and reported green), a live layout whose base
+    generation and segments all exist, and corpus fingerprint (the
+    cached ``_ann_validate_corpus`` guard — compaction never touches
+    meta, so the validation cache survives every rewrite).  Rebuilds
+    the full ingest history only when any gate fails
+    (``_ann_reuse_or_rebuild``: absent/stale/drifted/torn index — the
+    standalone correctness-sweep case).  In the bench suite, where
+    sink_ann_index_compact runs first, this key times exactly: one
+    postings read + ``repartition("cell")`` rewrite into the next
+    generation + atomic manifest commit + superseded-dir GC + the
+    in-plan content-identity proof.  Nothing else.
 
     Same oracle shape as the full verb minus ``files_collapsed``: a
     reused index is already one-file-per-cell, so the rewrite holds
@@ -3228,223 +1819,21 @@ def sink_ann_index_compact_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     — exactly one data file per cell — is pinned by tests either
     way)."""
     suffix = "_compact"
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    cpath, ppath, mpath = _ann_index_paths(sf_dir, suffix)
-    try:
-        if not (
-            os.path.isdir(cpath) and os.path.isdir(ppath) and os.path.isdir(mpath)
-        ):
-            raise FileNotFoundError("ANN _compact index not built")
-        meta = _ann_read_meta(mpath)
-        if meta["writer_version"] != _ANN_WRITER_VERSION:
-            raise ValueError("stale writer version")
-        _ann_check_geometry(cpath, meta)
+    emb = _ann_embeddings(spark, sf_dir)
+    root = _ann_root(sf_dir, suffix)
+
+    def reuse() -> None:
+        manifest = _ann_manifest_read(root)
+        meta, _centroids = _ann_open(root, manifest)
         # a manifest naming a vanished append segment — or, under
         # require_base (round-15), a vanished base GENERATION — raises
         # FileNotFoundError here, INSIDE the gate: rebuild route,
         # never a hard key failure from the proof block's read
-        _ann_live_paths(os.path.dirname(mpath), require_base=True)
-        _ann_validate_corpus(sf_dir, mpath, meta, emb)
-    except (FileNotFoundError, ValueError) + _SPARK_READ_ERRORS as ex:
-        # _SPARK_READ_ERRORS: a TORN meta/centroids parquet (crash
-        # mid-write, no commit marker, corrupt footer) surfaces from
-        # spark.read.parquet as AnalysisException / Py4JJavaError, not
-        # ValueError — the gate's contract is "rebuild when ANY
-        # validation fails", torn files included (round-12 advisory
-        # finding).  But ONLY artifact-shaped failures route here: a
-        # transient JVM error (executor OOM, disk-full) also raises
-        # Py4JJavaError and must propagate, not trigger a silent
-        # rebuild that masks it.  Failures of the rebuild itself still
-        # propagate: only the gate body is inside this try.
-        if not isinstance(
-            ex, (FileNotFoundError, ValueError)
-        ) and not _is_artifact_read_failure(ex):
-            raise
-        _ann_lay_ingest_history(spark, sf_dir, suffix)
-        _, ppath, mpath = _ann_index_paths(sf_dir, suffix)
+        _ann_live_paths(root, manifest, require_base=True)
+        _ann_validate_corpus(sf_dir, os.path.join(root, "meta"), meta, emb, manifest)
 
-    return _ann_compact_and_prove(spark, ppath, mpath, with_files_collapsed=False)
-
-
-def _serve_from_ann_index(
-    spark: SparkSession,
-    sf_dir: str,
-    with_recall: bool = True,
-    suffix: str = "",
-    validate_corpus: bool = False,
-    queries: "tuple | None" = None,
-) -> DataFrame:
-    """Pure read path: answer the query batch from the PERSISTED index
-    files only (raises if the index has not been built).
-
-    ``with_recall=False`` returns the served answers themselves
-    (qid, vec_id, cos — top-k per query) WITHOUT the exact-baseline
-    corpus pass that backs the recall flag: that pass is a full scan
-    by definition (it is the thing the index exists to avoid), so the
-    driver key keeps it for the correctness gate while the
-    amortization measurement (PERF.md round 9) times the product
-    path."""
-    nprobe, k = _ANN_NPROBE, _ANN_K
-    root = _ann_root(sf_dir, suffix)
-    cpath = os.path.join(root, "centroids")
-    mpath = os.path.join(root, "meta")
-    # ONE manifest parse per serve — the single observation point of
-    # the (mutable) layout state: the existence gate below, the corpus
-    # guard's derived stamp, AND the live-path resolution all derive
-    # from THIS snapshot (round-15, closing the round-14 advisory:
-    # resolving ppath through _ann_index_paths re-read the manifest
-    # independently, so a commit landing between the two reads let the
-    # gate and the served layout observe different layouts)
-    manifest = _ann_manifest_read(root)
-    ppath = _ann_base_path(root, manifest)
-    if not (os.path.isdir(cpath) and os.path.isdir(ppath) and os.path.isdir(mpath)):
-        raise FileNotFoundError(
-            "ANN index not built (or missing its version-stamp meta table) "
-            "— run sink_ann_index/_build_ann_index first"
-        )
-
-    from pyspark_caffe_spark import vecops
-
-    meta = _ann_read_meta(mpath)
-    if meta["writer_version"] != _ANN_WRITER_VERSION:
-        raise ValueError(
-            f"ANN index was written by writer_version={meta['writer_version']} "
-            f"but this code serves version={_ANN_WRITER_VERSION}: a scratch "
-            "dir survived a code upgrade — rebuild via sink_ann_index/"
-            "_build_ann_index before serving"
-        )
-    centroids = _ann_check_geometry(cpath, meta)
-    nprobe = min(nprobe, len(centroids))  # degenerate tiny-corpus index
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    if validate_corpus:
-        # threaded snapshot: the guard's derived stamp describes the
-        # same layout the union below serves
-        _ann_validate_corpus(sf_dir, mpath, meta, emb, manifest)
-    # bounded query slice (same contract as sim_knn_ivf_batch: a fixed
-    # hash-exact slice, capped so the serving pass is O(N), not O(N²))
-    qpred = (F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)
-    queries_df = emb.filter(qpred)
-    if queries is None:
-        # one collect job per serve; a caller serving the SAME batch
-        # twice (sim_knn_ivf_refresh's before/after pair) passes the
-        # collected matrix instead of re-running the job (round 19,
-        # guide §1.2 — the slice is deterministic, so the two collects
-        # were byte-identical)
-        qids, qmat, _ = vecops._collect_matrix(queries_df, "vec_id", "emb")
-    else:
-        qids, qmat = queries
-
-    probe_rank = np.argsort(-(qmat @ centroids.T), axis=1)[:, :nprobe]
-    probe_mask = np.zeros((len(qids), len(centroids)), dtype=bool)
-    np.put_along_axis(probe_mask, probe_rank, True, axis=1)
-    probed_cells = sorted({int(c) for c in probe_rank.reshape(-1)})
-
-    # live layout = base generation + append segments (manifest order),
-    # one flat union with the cell filter pruning unprobed partition
-    # dirs on EVERY leg (round-13 design note)
-    live = _ann_live_paths(root, manifest)
-    post = (
-        _ann_read_postings(spark, live)
-        # partition pruning: only the probed cell directories are read
-        .filter(F.col("cell").isin(probed_cells))
-        # the query slice is not part of the served corpus (mirror of
-        # sim_knn_ivf_batch's corpus = emb \ queries)
-        .filter(~((F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)))
-    )
-    bc = spark.sparkContext.broadcast((qids, qmat, probe_mask))
-
-    def serve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, q_mat, p_mask = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            cells = pdf["cell"].to_numpy().astype(np.int64)
-            cand = p_mask[:, cells]            # [nq × rows]
-            scores = np.round(x @ q_mat.T, 6)  # [rows × nq]
-            out_q, out_id, out_cos = [], [], []
-            for qi in range(len(q_ids)):
-                cidx = np.nonzero(cand[qi])[0]
-                if not len(cidx):
-                    continue
-                # within-batch dedup (a vector can arrive from two
-                # probed cells) so duplicates can't crowd the local
-                # top-k; scores for a duplicate are identical
-                uniq_ids, first = np.unique(ids[cidx], return_index=True)
-                sub = scores[cidx, qi][first]
-                sel = np.lexsort((uniq_ids, -sub))[: min(k, len(uniq_ids))]
-                out_q.extend([q_ids[qi]] * len(sel))
-                out_id.extend(uniq_ids[sel])
-                out_cos.extend(sub[sel])
-            if out_q:
-                yield pd.DataFrame(
-                    {"qid": out_q, "vec_id": out_id, "cos": out_cos}
-                )
-
-    from pyspark.sql import Window
-
-    cand = post.mapInPandas(serve, schema="qid long, vec_id long, cos double")
-    # global dedup across batches/cells, then the bounded top-k merge
-    best = cand.groupBy("qid", "vec_id").agg(F.max("cos").alias("cos"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    ivf_ranked = best.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= k
-    )
-    if not with_recall:
-        return ivf_ranked.select("qid", "vec_id", "cos")
-    ivf_top = ivf_ranked.select("qid", "vec_id")
-
-    # exact baseline: one corpus pass, per-batch local top-k per query,
-    # global window merge (provably contains the true top-k)
-    corpus = emb.filter(~qpred)
-    bc_q = spark.sparkContext.broadcast((qids, qmat))
-
-    def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, q_mat = bc_q.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            scores = np.round(x @ q_mat.T, 6)
-            out_q, out_id, out_cos = [], [], []
-            for qi in range(len(q_ids)):
-                col = scores[:, qi]
-                sel = np.lexsort((ids, -col))[: min(k, len(col))]
-                out_q.extend([q_ids[qi]] * len(sel))
-                out_id.extend(ids[sel])
-                out_cos.extend(col[sel])
-            if out_q:
-                yield pd.DataFrame(
-                    {"qid": out_q, "vec_id": out_id, "cos": out_cos}
-                )
-
-    ex = corpus.mapInPandas(exact, schema="qid long, vec_id long, cos double")
-    exact_top = (
-        ex.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("qid", "vec_id")
-    )
-    hits = (
-        ivf_top.join(exact_top, ["qid", "vec_id"], "inner")
-        .groupBy("qid")
-        .agg(F.count("*").alias("_hits"))
-    )
-    return (
-        queries_df.select(F.col("vec_id").alias("qid"))
-        .join(F.broadcast(hits), "qid", "left")
-        .select(
-            "qid",
-            F.lit(k).alias("k"),
-            (F.coalesce(F.col("_hits"), F.lit(0)) >= int(0.9 * k)).alias("recall_ok"),
-        )
-    )
+    _ann_reuse_or_rebuild(reuse, lambda: _ann_lay_ingest_history(spark, sf_dir, suffix))
+    return _ann_compact_and_prove(spark, sf_dir, suffix, with_files_collapsed=False)
 
 
 @query(

@@ -612,3 +612,30 @@ def test_driver_rows_never_raises_fuzz(tmp_path, monkeypatch):
     )
     rows = entry._driver_rows()
     assert rows == {"a": {"hash_match": True, "_round": 3}}
+
+
+def test_bench_chunk_lines_respect_max_len():
+    """bench._chunk_lines sizes each chunk with the REAL tag at its
+    worst-case ``(i/n)`` width, so no emitted line exceeds ``max_len``
+    — checked for a 40-key dict across a sweep of caps (a placeholder
+    tag shorter than the real one lets a chunk boundary land up to the
+    length difference past the cap) — and the chunks partition the
+    dict in order under consecutive ``(i/n)`` tags."""
+    import json
+
+    import bench
+
+    d = {f"sink_ann_index_compact_only_{i:02d}": round(1.0 + i / 7, 4) for i in range(40)}
+    tag = "bench extras per-query"
+    for max_len in range(120, 700, 3):
+        lines = bench._chunk_lines(tag, "queries_extra", d, max_len=max_len)
+        assert all(len(line) <= max_len for line in lines), (
+            max_len, max(len(line) for line in lines)
+        )
+        parsed = [json.loads(line) for line in lines]
+        n = len(parsed)
+        assert [p["metric"] for p in parsed] == [
+            f"{tag} ({i + 1}/{n})" for i in range(n)
+        ]
+        merged = [kv for p in parsed for kv in p["queries_extra"].items()]
+        assert merged == list(d.items())

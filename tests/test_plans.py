@@ -830,22 +830,22 @@ def test_ann_fence_serializes_threaded_writers(tmp_path):
     interleaved replace ever drops a committed line)."""
     import threading
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     root = str(tmp_path)
-    so._ann_manifest_commit(root, ("postings", 0, 0), ())
+    ai._ann_manifest_commit(root, ("postings", 0, 0), ())
     n_threads, conflicts = 8, []
     errs = []
 
     def writer(i: int) -> None:
         for attempt in range(200):
-            snap = so._ann_manifest_read(root)
+            snap = ai._ann_manifest_read(root)
             gen, segs = snap[:3], snap[3]
             new_segs = tuple(segs) + ((f"postings_seg{i}", i + 1, 100 + i),)
             try:
-                so._ann_manifest_commit(root, gen, new_segs, expected=snap)
+                ai._ann_manifest_commit(root, gen, new_segs, expected=snap)
                 return
-            except so.AnnConcurrentWriterError:
+            except ai.AnnConcurrentWriterError:
                 conflicts.append(i)  # retry from a fresh read
             except Exception as ex:  # noqa: BLE001
                 errs.append(ex)
@@ -859,7 +859,7 @@ def test_ann_fence_serializes_threaded_writers(tmp_path):
         t.join()
 
     assert not errs, errs
-    _name, _n, _fp, segs = so._ann_manifest_read(root)
+    _name, _n, _fp, segs = ai._ann_manifest_read(root)
     names = sorted(s[0] for s in segs)
     assert names == sorted(f"postings_seg{i}" for i in range(n_threads)), (
         f"lost update: {names} (conflict retries observed: {len(conflicts)})"

@@ -272,7 +272,7 @@ def test_ivf_batch_recall_independent(spark, sf_dir):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from pyspark_caffe_spark.queries.scale_ops import _lloyd_spherical
+    from pyspark_caffe_spark.annindex import _lloyd_spherical
     from pyspark_caffe_spark.tables import load_table
 
     nlist, nprobe, k, m_assign = 16, 10, 10, 3
@@ -325,7 +325,7 @@ def test_ann_index_persisted_and_serve_prunes_partitions(spark, sf_dir):
       in-plan flag vs the exact baseline)."""
     import os
 
-    from pyspark_caffe_spark.queries.scale_ops import _ann_index_paths
+    from pyspark_caffe_spark.annindex import _ann_index_paths
 
     audit = QUERIES["sink_ann_index"](spark, sf_dir).collect()[0]
     assert audit.coverage_ok and audit.cells_ok
@@ -356,7 +356,7 @@ def test_ann_index_stale_version_refuses_to_serve(spark, sf_dir):
 
     import pytest as _pytest
 
-    from pyspark_caffe_spark.queries.scale_ops import (
+    from pyspark_caffe_spark.annindex import (
         _ann_index_paths,
         _build_ann_index,
         _serve_from_ann_index,
@@ -425,30 +425,30 @@ def test_ann_corpus_validation_cached_per_generation(spark, sf_dir, monkeypatch)
     O(corpus) vec_id scan (the steady-state serve is guard-free),
     while a REBUILT index is a new generation (meta stat signature
     changes) and forces exactly one fresh validation scan."""
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
-    so._build_ann_index(spark, sf_dir)
-    so._ANN_VALIDATED.clear()
+    ai._build_ann_index(spark, sf_dir)
+    ai._ANN_VALIDATED.clear()
     calls = {"n": 0}
-    real = so._ann_corpus_fingerprint
+    real = ai._ann_corpus_fingerprint
 
     def counting(emb):
         calls["n"] += 1
         return real(emb)
 
-    monkeypatch.setattr(so, "_ann_corpus_fingerprint", counting)
+    monkeypatch.setattr(ai, "_ann_corpus_fingerprint", counting)
     kw = dict(with_recall=False, validate_corpus=True)
-    assert so._serve_from_ann_index(spark, sf_dir, **kw).count() > 0
+    assert ai._serve_from_ann_index(spark, sf_dir, **kw).count() > 0
     assert calls["n"] == 1, "first guarded serve must scan the corpus"
-    assert so._serve_from_ann_index(spark, sf_dir, **kw).count() > 0
+    assert ai._serve_from_ann_index(spark, sf_dir, **kw).count() > 0
     assert calls["n"] == 1, "unchanged (index, dataset) pair must not re-scan"
     # rebuild rewrites meta → new generation: since round 18 the
     # build's stamp fingerprint rides the postings-write pass via
     # observe (no separate _ann_corpus_fingerprint scan), so only the
     # next guarded serve re-validates — exactly once
-    so._build_ann_index(spark, sf_dir)
+    ai._build_ann_index(spark, sf_dir)
     assert calls["n"] == 1, "build must not run a separate fingerprint scan"
-    assert so._serve_from_ann_index(spark, sf_dir, **kw).count() > 0
+    assert ai._serve_from_ann_index(spark, sf_dir, **kw).count() > 0
     assert calls["n"] == 2, "new index generation must re-validate exactly once"
 
 
@@ -564,7 +564,7 @@ def test_ivf_refresh_delta_actually_served(spark, sf_dir):
     and (c) the key's flags are all green."""
     import os
 
-    from pyspark_caffe_spark.queries.scale_ops import (
+    from pyspark_caffe_spark.annindex import (
         _ann_index_paths,
         _serve_from_ann_index,
     )
@@ -579,16 +579,16 @@ def test_ivf_refresh_delta_actually_served(spark, sf_dir):
     n_delta_hits = served.filter(F.pmod(F.col("vec_id"), F.lit(10)) == 7).count()
     assert n_delta_hits > 0, "no appended vector ever surfaced in a top-k"
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
     n_all = emb.count()
     n_delta = emb.filter(F.pmod(F.col("vec_id"), F.lit(10)) == 7).count()
     _, ppath, mpath = _ann_index_paths(sf_dir, "_refresh")
     root = os.path.dirname(mpath)
-    live = so._ann_live_paths(root)
+    live = ai._ann_live_paths(root)
     assert len(live) == 2, "one append day = base generation + ONE segment"
-    n_postings = so._ann_read_postings(spark, live).count()
+    n_postings = ai._ann_read_postings(spark, live).count()
     assert n_postings == 3 * n_all, (n_postings, n_all, n_delta)
 
     # round-14 (segment append): meta keeps the BASE stamp — the
@@ -602,9 +602,9 @@ def test_ivf_refresh_delta_actually_served(spark, sf_dir):
     # fingerprint comparison against the derived stamp.
     meta = spark.read.parquet(mpath).collect()[0]
     assert meta.corpus_n == n_all - n_delta, (meta.corpus_n, n_all, n_delta)
-    eff_n, _eff_fp, _manifest = so._ann_effective_stamp(root, meta)
+    eff_n, _eff_fp, _manifest = ai._ann_effective_stamp(root, meta)
     assert eff_n == n_all, (eff_n, n_all)
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
     assert _serve_from_ann_index(
         spark, sf_dir, with_recall=False, suffix="_refresh", validate_corpus=True
     ).count() > 0, "appended refresh index spuriously refused"
@@ -620,13 +620,13 @@ def test_ann_index_compact_one_file_per_cell(spark, sf_dir):
     content — it must never need a restamp)."""
     import os
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     row = QUERIES["sink_ann_index_compact"](spark, sf_dir).collect()[0]
     assert row.content_identical and row.files_collapsed and row.stamp_still_valid
     assert row.n_postings == 3 * row.n_vectors
 
-    _, ppath, _ = so._ann_index_paths(sf_dir, "_compact")
+    _, ppath, _ = ai._ann_index_paths(sf_dir, "_compact")
     for cell_dir in sorted(os.listdir(ppath)):
         if not cell_dir.startswith("cell="):
             continue
@@ -639,16 +639,16 @@ def test_ann_index_compact_one_file_per_cell(spark, sf_dir):
 
     # the stamp survived the rewrite: a guarded serve (cache cleared so
     # the fingerprint comparison actually runs) must NOT refuse
-    so._ANN_VALIDATED.clear()
-    assert so._serve_from_ann_index(
+    ai._ANN_VALIDATED.clear()
+    assert ai._serve_from_ann_index(
         spark, sf_dir, with_recall=False, suffix="_compact", validate_corpus=True
     ).count() > 0, "compacted index spuriously refused by the corpus guard"
 
 
 def test_ann_compact_crash_windows_leave_servable_index(spark, sf_dir):
     """Round-11 verdict ask #3: the compact swap must have NO window
-    with an unreadable index.  The commit point is the atomic pointer-
-    file flip (_ann_flip_pointer); this test walks the swap manually
+    with an unreadable index.  The commit point is the atomic manifest
+    replace (_ann_manifest_commit); this test walks the swap manually
     and verifies a simulated crash at EVERY boundary leaves a serve
     that answers:
 
@@ -661,16 +661,16 @@ def test_ann_compact_crash_windows_leave_servable_index(spark, sf_dir):
     """
     import os
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     suffix = "_crash"
-    so._build_ann_index(spark, sf_dir, suffix=suffix)
-    _, ppath, mpath = so._ann_index_paths(sf_dir, suffix)
+    ai._build_ann_index(spark, sf_dir, suffix=suffix)
+    _, ppath, mpath = ai._ann_index_paths(sf_dir, suffix)
     root = os.path.dirname(mpath)
     assert os.path.basename(ppath) == "postings", "fresh build = base layout"
 
     baseline = (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
     )
     assert baseline > 0
@@ -685,21 +685,21 @@ def test_ann_compact_crash_windows_leave_servable_index(spark, sf_dir):
         .parquet(orphan)
     )
     # no flip — resolution must still point at the base generation
-    _, resolved, _ = so._ann_index_paths(sf_dir, suffix)
+    _, resolved, _ = ai._ann_index_paths(sf_dir, suffix)
     assert resolved == ppath, "unflipped rewrite must be invisible"
     assert (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
         == baseline
     ), "crash between write-aside and flip broke the serve path"
 
     # --- crash 2: pointer flipped, superseded dirs NOT deleted ---
-    so._ann_flip_pointer(root, "postings_gen1")
-    _, resolved, _ = so._ann_index_paths(sf_dir, suffix)
+    ai._ann_manifest_commit(root, ("postings_gen1", 0, 0), ())
+    _, resolved, _ = ai._ann_index_paths(sf_dir, suffix)
     assert resolved == orphan, "flip must re-route resolution atomically"
     assert os.path.isdir(ppath), "test premise: old dir still on disk"
     assert (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
         == baseline
     ), "crash between flip and cleanup broke the serve path"
@@ -707,14 +707,14 @@ def test_ann_compact_crash_windows_leave_servable_index(spark, sf_dir):
     # --- a real compact from the crash-2 state: must pick gen2 (no
     # collision with the crash orphan's number) and GC both the stale
     # base dir and nothing else ---
-    new_ppath = so._ann_compact_postings(spark, resolved)
+    new_ppath, _ = ai._ann_compact_postings(spark, resolved)
     assert os.path.basename(new_ppath) == "postings_gen2"
     leftovers = sorted(
         n for n in os.listdir(root) if n == "postings" or n.startswith("postings_gen")
     )
     assert leftovers == ["postings_gen2"], leftovers
     assert (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
         == baseline
     ), "post-compact generation does not serve"
@@ -727,23 +727,23 @@ def test_ann_compact_crash_windows_leave_servable_index(spark, sf_dir):
     import pytest
 
     with pytest.raises(FileNotFoundError):
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
 
     # a rebuild recovers from any of the above states
-    so._build_ann_index(spark, sf_dir, suffix=suffix)
+    ai._build_ann_index(spark, sf_dir, suffix=suffix)
     assert (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
         == baseline
     )
-    assert not os.path.exists(os.path.join(root, so._ANN_GEN_POINTER)), (
+    assert not os.path.exists(os.path.join(root, ai._ANN_GEN_POINTER)), (
         "rebuild must retire the generation pointer"
     )
 
 
 def test_ann_pointer_fallback_chain(spark, sf_dir):
     """Round-12 verdict ask #4: the crash-walk covers the FLIP; this
-    pins the MANUAL-DELETION fallback chain _ann_postings_current's
+    pins the MANUAL-DELETION fallback chain _ann_base_path's
     docstring argues:
 
       (a) pointer naming a VANISHED generation while the base postings
@@ -760,53 +760,53 @@ def test_ann_pointer_fallback_chain(spark, sf_dir):
 
     import pytest
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     suffix = "_ptrfb"
-    so._build_ann_index(spark, sf_dir, suffix=suffix)
-    _, ppath, mpath = so._ann_index_paths(sf_dir, suffix)
+    ai._build_ann_index(spark, sf_dir, suffix=suffix)
+    _, ppath, mpath = ai._ann_index_paths(sf_dir, suffix)
     root = os.path.dirname(mpath)
     assert os.path.basename(ppath) == "postings", "fresh build = base layout"
     baseline = (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
     )
     assert baseline > 0
 
     # (a) pointer → never-written generation, base intact: fall back
-    with open(os.path.join(root, so._ANN_GEN_POINTER), "w") as f:
+    with open(os.path.join(root, ai._ANN_GEN_POINTER), "w") as f:
         f.write("postings_gen7\n")
-    _, resolved, _ = so._ann_index_paths(sf_dir, suffix)
+    _, resolved, _ = ai._ann_index_paths(sf_dir, suffix)
     assert resolved == ppath, "vanished-generation pointer must resolve to base"
     assert (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
         == baseline
     ), "base fallback must serve the intact base layout"
 
     # (b) garbage pointer content (e.g. torn write on a pre-fsync fs):
     # basename() of junk is a non-dir name → same base fallback
-    with open(os.path.join(root, so._ANN_GEN_POINTER), "w") as f:
+    with open(os.path.join(root, ai._ANN_GEN_POINTER), "w") as f:
         f.write("../../etc/passwd\0junk")
-    _, resolved, _ = so._ann_index_paths(sf_dir, suffix)
+    _, resolved, _ = ai._ann_index_paths(sf_dir, suffix)
     assert resolved == ppath, "garbage pointer must resolve to base"
 
     # (c) vanished generation AND no base: loud failure, no silent
     # empty serve
-    with open(os.path.join(root, so._ANN_GEN_POINTER), "w") as f:
+    with open(os.path.join(root, ai._ANN_GEN_POINTER), "w") as f:
         f.write("postings_gen7\n")
     shutil.rmtree(ppath)
     with pytest.raises(FileNotFoundError):
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
 
     # rebuild recovers and retires the dangling pointer
-    so._build_ann_index(spark, sf_dir, suffix=suffix)
+    ai._build_ann_index(spark, sf_dir, suffix=suffix)
     assert (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
         == baseline
     )
-    assert not os.path.exists(os.path.join(root, so._ANN_GEN_POINTER))
+    assert not os.path.exists(os.path.join(root, ai._ANN_GEN_POINTER))
 
 
 def test_cc_hub_skew_bounded(spark):
@@ -858,7 +858,7 @@ def test_cc_hub_skew_bounded(spark):
     ]
 
 
-def test_ann_compact_only_reuses_index_and_keeps_meta(spark, sf_dir):
+def test_ann_compact_only_reuses_index_and_keeps_meta(spark, sf_dir, monkeypatch):
     """sink_ann_index_compact_only (round-11 verdict ask #5: the
     amortized maintenance metric) must (a) REUSE a persisted valid
     _compact index — no rebuild, proven by the meta stamp's stat
@@ -868,24 +868,43 @@ def test_ann_compact_only_reuses_index_and_keeps_meta(spark, sf_dir):
     identity + stamp validity.  A second invocation must reuse again
     (meta is still byte-identical; the manifest's generation line
     changed, so the corpus guard re-runs one thin scan against the
-    unchanged derived stamp and passes — round-14 segment manifest)."""
+    unchanged derived stamp and passes — round-14 segment manifest).
+
+    Every compaction here — of the freshly built index with two
+    appended segments, and of the reused one — reads the live layout
+    exactly ONCE: the identity observed on the rewrite's own read
+    matches the effective stamp's corpus_n · m, so the fallback
+    snapshot scan never fires when nothing is wrong."""
     import os
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
+
+    reads = []
+    real_read = ai._ann_read_postings
+
+    def counting_read(spark_, paths):
+        reads.append(list(paths))
+        return real_read(spark_, paths)
+
+    monkeypatch.setattr(ai, "_ann_read_postings", counting_read)
 
     # lay down the ingest history + first compaction via the full verb
     QUERIES["sink_ann_index_compact"](spark, sf_dir).collect()
-    _, ppath_before, mpath = so._ann_index_paths(sf_dir, "_compact")
-    meta_sig_before = so._path_sig(mpath)
+    assert len(reads) == 1, f"fresh base + 2 segments: {len(reads)} layout reads"
+    assert len(reads[0]) == 3, "the one read must cover base + both segments"
+    _, ppath_before, mpath = ai._ann_index_paths(sf_dir, "_compact")
+    meta_sig_before = ai._path_sig(mpath)
 
+    reads.clear()
     row = QUERIES["sink_ann_index_compact_only"](spark, sf_dir).collect()[0]
     assert row.content_identical and row.stamp_still_valid
     assert row.n_postings == 3 * row.n_vectors
+    assert len(reads) == 1, f"reused index: {len(reads)} layout reads"
 
-    _, ppath_after, _ = so._ann_index_paths(sf_dir, "_compact")
+    _, ppath_after, _ = ai._ann_index_paths(sf_dir, "_compact")
     assert ppath_after != ppath_before, "generation did not advance"
     assert not os.path.exists(ppath_before), "superseded generation not GC'd"
-    assert so._path_sig(mpath) == meta_sig_before, (
+    assert ai._path_sig(mpath) == meta_sig_before, (
         "compact_only restamped or rebuilt meta — it must move bytes only"
     )
     for cell_dir in sorted(os.listdir(ppath_after)):
@@ -900,7 +919,68 @@ def test_ann_compact_only_reuses_index_and_keeps_meta(spark, sf_dir):
 
     row2 = QUERIES["sink_ann_index_compact_only"](spark, sf_dir).collect()[0]
     assert row2.content_identical and row2.stamp_still_valid
-    assert so._path_sig(mpath) == meta_sig_before
+    assert ai._path_sig(mpath) == meta_sig_before
+
+
+def test_ann_compact_cross_check_falls_back_on_stamp_mismatch(
+    spark, sf_dir, monkeypatch
+):
+    """The other half of the compaction cross-check: when the observed
+    posting count disagrees with the manifest-derived expectation
+    (here a segment whose committed n delta is off by one), the
+    compaction must take the fallback — a second, dedicated read of
+    the old live layout — and record THAT scan's identity.  Together
+    with the single-read pin above, the guard neither always nor
+    never fires."""
+    import shutil
+
+    import pyspark_caffe_spark.annindex as ai
+
+    suffix = "_guardfb"
+    ai._ann_lay_ingest_history(spark, sf_dir, suffix)
+    root = ai._ann_root(sf_dir, suffix)
+    gen_name, gen_n, gen_fp, segs = ai._ann_manifest_read(root)
+    (s1_name, s1_n, s1_fp), seg2 = segs
+    ai._ann_manifest_commit(
+        root, (gen_name, gen_n, gen_fp), ((s1_name, s1_n + 1, s1_fp), seg2)
+    )
+    live = ai._ann_live_paths(root)
+    direct = (
+        ai._ann_read_postings(spark, live)
+        .agg(*ai._ann_identity_exprs(ai._ann_posting_row_hash()))
+        .collect()[0]
+    )
+
+    reads = []
+    real_read = ai._ann_read_postings
+
+    def counting_read(spark_, paths):
+        reads.append(list(paths))
+        return real_read(spark_, paths)
+
+    monkeypatch.setattr(ai, "_ann_read_postings", counting_read)
+    _new_ppath, identity = ai._ann_compact_postings(spark, live[0])
+    assert reads == [live, live], f"expected observe + fallback reads: {reads}"
+    assert identity == (int(direct["n"]), int(direct["h"]))
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def test_annindex_does_not_import_the_query_layer():
+    """Import boundary: ``scale_ops`` imports ``annindex``, never the
+    reverse — importing the store alone must not pull in the query
+    registry (checked in a fresh interpreter, where no earlier import
+    can mask the edge)."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, pyspark_caffe_spark.annindex\n"
+        "assert 'pyspark_caffe_spark.queries' not in sys.modules, sorted(\n"
+        "    m for m in sys.modules if m.startswith('pyspark_caffe_spark'))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], cwd=repo, check=True)
 
 
 def test_ann_compact_only_refuses_geometry_crash_remnant(spark, sf_dir):
@@ -911,10 +991,10 @@ def test_ann_compact_only_refuses_geometry_crash_remnant(spark, sf_dir):
     route to the REBUILD path, never be compacted and reported green.
     Observable: the rebuild rewrites meta (stat signature changes),
     where the healthy reuse path leaves meta untouched."""
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     QUERIES["sink_ann_index_compact"](spark, sf_dir).collect()
-    cpath, _, mpath = so._ann_index_paths(sf_dir, "_compact")
+    cpath, _, mpath = ai._ann_index_paths(sf_dir, "_compact")
 
     # simulate the crash remnant: different-geometry centroids under
     # the same path, meta/postings untouched
@@ -923,12 +1003,12 @@ def test_ann_compact_only_refuses_geometry_crash_remnant(spark, sf_dir):
     spark.createDataFrame(broken, "cell int, centroid array<double>").write.mode(
         "overwrite"
     ).parquet(cpath)
-    so._ANN_VALIDATED.clear()
-    meta_sig_broken = so._path_sig(mpath)
+    ai._ANN_VALIDATED.clear()
+    meta_sig_broken = ai._path_sig(mpath)
 
     row = QUERIES["sink_ann_index_compact_only"](spark, sf_dir).collect()[0]
     assert row.content_identical and row.stamp_still_valid
-    assert so._path_sig(mpath) != meta_sig_broken, (
+    assert ai._path_sig(mpath) != meta_sig_broken, (
         "compact_only reused a geometry-inconsistent crash remnant "
         "instead of rebuilding"
     )
@@ -944,10 +1024,10 @@ def test_ann_compact_only_rebuilds_on_torn_meta(spark, sf_dir):
     import glob
     import os
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     QUERIES["sink_ann_index_compact"](spark, sf_dir).collect()
-    _, _, mpath = so._ann_index_paths(sf_dir, "_compact")
+    _, _, mpath = ai._ann_index_paths(sf_dir, "_compact")
 
     # tear the meta: truncate every data file to garbage (no valid
     # parquet footer), directory still present so isdir gates pass
@@ -956,7 +1036,7 @@ def test_ann_compact_only_rebuilds_on_torn_meta(spark, sf_dir):
     for p in parts:
         with open(p, "wb") as f:
             f.write(b"PAR1 torn by crash")
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
 
     row = QUERIES["sink_ann_index_compact_only"](spark, sf_dir).collect()[0]
     assert row.content_identical and row.stamp_still_valid, (
@@ -973,19 +1053,19 @@ def test_ann_serve_only_rebuilds_on_torn_meta(spark, sf_dir):
     import glob
     import os
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     QUERIES["sink_ann_index"](spark, sf_dir).collect()
-    _, _, mpath = so._ann_index_paths(sf_dir, "")
+    _, _, mpath = ai._ann_index_paths(sf_dir, "")
     parts = glob.glob(os.path.join(mpath, "*.parquet"))
     assert parts, "test premise: meta has data files"
     for p in parts:
         with open(p, "wb") as f:
             f.write(b"PAR1 torn by crash")
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
 
     rows = QUERIES["sim_knn_ivf_serve_only"](spark, sf_dir).collect()
-    assert rows and all(r["n_results"] == so._ANN_K for r in rows), (
+    assert rows and all(r["n_results"] == ai._ANN_K for r in rows), (
         "torn meta must route serve_only to the rebuild path"
     )
 
@@ -996,7 +1076,7 @@ def test_ann_gate_routes_only_artifact_failures():
     Py4JJavaError and must PROPAGATE — silently rebuilding would mask
     the real error class and turn the pure-serve product metric into
     serve+build with no flag (round-13 review finding)."""
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     class FakeJvmError(Exception):
         pass
@@ -1008,7 +1088,7 @@ def test_ann_gate_routes_only_artifact_failures():
         "file:/x/part-0.parquet is not a Parquet file. Expected magic number",
         "org.apache.hadoop.fs.ChecksumException: Checksum error: file:/x",
     ):
-        assert so._is_artifact_read_failure(FakeJvmError(msg)), msg
+        assert ai._is_artifact_read_failure(FakeJvmError(msg)), msg
 
     # transient JVM failures — must propagate
     for msg in (
@@ -1016,28 +1096,28 @@ def test_ann_gate_routes_only_artifact_failures():
         "org.apache.spark.shuffle.FetchFailedException: Connection reset",
         "java.io.IOException: No space left on device",
     ):
-        assert not so._is_artifact_read_failure(FakeJvmError(msg)), msg
+        assert not ai._is_artifact_read_failure(FakeJvmError(msg)), msg
 
     # AnalysisException routes ONLY with an artifact-shaped errorClass/
     # message (round-13 advisory: isinstance alone would route a
     # genuine code bug — UNRESOLVED_COLUMN raised inside the gated
     # serve/validate calls — to a silent rebuild+retry, masking the
     # bug and turning the pure-serve metric into serve+build)
-    if so._AnalysisException is not None:
+    if ai._AnalysisException is not None:
         for msg in (
             "[PATH_NOT_FOUND] Path does not exist: file:/x/meta",
             "[UNABLE_TO_INFER_SCHEMA] Unable to infer schema for Parquet",
             "[FAILED_READ_FILE.CANNOT_READ_FILE_FOOTER] Could not read footer",
         ):
-            assert so._is_artifact_read_failure(so._AnalysisException(msg)), msg
+            assert ai._is_artifact_read_failure(ai._AnalysisException(msg)), msg
         for msg in (
             "[UNRESOLVED_COLUMN.WITH_SUGGESTION] A column or function "
             "parameter with name `vec_idd` cannot be resolved.",
             "[DATATYPE_MISMATCH.BINARY_OP_DIFF_TYPES] Cannot resolve "
             '"(cell + emb)" due to data type mismatch.',
         ):
-            assert not so._is_artifact_read_failure(
-                so._AnalysisException(msg)
+            assert not ai._is_artifact_read_failure(
+                ai._AnalysisException(msg)
             ), msg
 
     # stack-FRAME lines never classify: a frame whose class name
@@ -1049,13 +1129,13 @@ def test_ann_gate_routes_only_artifact_failures():
         "\tat org.apache.hadoop.fs.FAILED_READ_FILE_Helper.run(X.java:1)\n"
         "\tat org.apache.spark.scheduler.Task.run(Task.scala:139)"
     )
-    assert not so._is_artifact_read_failure(frame_only)
+    assert not ai._is_artifact_read_failure(frame_only)
     wrapped_cause = FakeJvmError(
         "org.apache.spark.SparkException: Job aborted due to stage failure\n"
         "\tat org.apache.spark.scheduler.DAGScheduler.abort(D.scala:2)\n"
         "Caused by: org.apache.hadoop.fs.ChecksumException: Checksum error"
     )
-    assert so._is_artifact_read_failure(wrapped_cause)
+    assert ai._is_artifact_read_failure(wrapped_cause)
 
 
 def test_ann_append_crash_orphan_invisible_and_gcd(spark, sf_dir):
@@ -1069,18 +1149,18 @@ def test_ann_append_crash_orphan_invisible_and_gcd(spark, sf_dir):
     import os
     import shutil
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
     from pyspark_caffe_spark.tables import load_table
 
     suffix = "_segcrash"
     delta_pred = F.pmod(F.col("vec_id"), F.lit(10)) == 7
-    so._build_ann_index(spark, sf_dir, corpus_filter=~delta_pred, suffix=suffix)
-    _, ppath, mpath = so._ann_index_paths(sf_dir, suffix)
+    ai._build_ann_index(spark, sf_dir, corpus_filter=~delta_pred, suffix=suffix)
+    _, ppath, mpath = ai._ann_index_paths(sf_dir, suffix)
     root = os.path.dirname(mpath)
-    meta_sig_base = so._path_sig(mpath)
+    meta_sig_base = ai._path_sig(mpath)
 
     baseline = (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
     )
     assert baseline > 0
@@ -1096,9 +1176,9 @@ def test_ann_append_crash_orphan_invisible_and_gcd(spark, sf_dir):
         .partitionBy("cell")
         .parquet(orphan)
     )
-    assert so._ann_live_paths(root) == [ppath], "orphan must be invisible"
+    assert ai._ann_live_paths(root) == [ppath], "orphan must be invisible"
     assert (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
         == baseline
     ), "crash between segment write and manifest commit changed the serve"
@@ -1107,29 +1187,29 @@ def test_ann_append_crash_orphan_invisible_and_gcd(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    so._ann_append(spark, sf_dir, suffix, emb.filter(delta_pred))
-    live = so._ann_live_paths(root)
+    ai._ann_append(spark, sf_dir, suffix, emb.filter(delta_pred))
+    live = ai._ann_live_paths(root)
     assert [os.path.basename(p) for p in live] == ["postings", "postings_seg2"], (
         "append must skip the crash orphan's number"
     )
-    assert so._path_sig(mpath) == meta_sig_base, (
+    assert ai._path_sig(mpath) == meta_sig_base, (
         "append rewrote meta — segments must commit through the manifest only"
     )
     meta = spark.read.parquet(mpath).collect()[0]
-    eff_n, _fp, _m = so._ann_effective_stamp(root, meta)
+    eff_n, _fp, _m = ai._ann_effective_stamp(root, meta)
     assert eff_n == emb.count(), "derived stamp must cover the appended delta"
 
     # guarded serve validates the appended layout (fresh comparison)
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
     assert (
-        so._serve_from_ann_index(
+        ai._serve_from_ann_index(
             spark, sf_dir, with_recall=False, suffix=suffix, validate_corpus=True
         ).count()
         == baseline
     )
 
     # --- compact folds the live segment AND GCs the orphan ---
-    new_ppath = so._ann_compact_postings(spark, so._ann_index_paths(sf_dir, suffix)[1])
+    new_ppath, _ = ai._ann_compact_postings(spark, ai._ann_index_paths(sf_dir, suffix)[1])
     leftovers = sorted(
         n
         for n in os.listdir(root)
@@ -1137,11 +1217,11 @@ def test_ann_append_crash_orphan_invisible_and_gcd(spark, sf_dir):
     )
     assert leftovers == [os.path.basename(new_ppath)], leftovers
     # folded deltas carried onto the generation line: stamp unchanged
-    eff_n2, _fp2, _m2 = so._ann_effective_stamp(root, meta)
+    eff_n2, _fp2, _m2 = ai._ann_effective_stamp(root, meta)
     assert eff_n2 == eff_n, "compaction must not change the derived stamp"
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
     assert (
-        so._serve_from_ann_index(
+        ai._serve_from_ann_index(
             spark, sf_dir, with_recall=False, suffix=suffix, validate_corpus=True
         ).count()
         == baseline
@@ -1161,20 +1241,20 @@ def test_ann_vanished_segment_fails_loud_then_rebuilds(spark, sf_dir):
 
     import pytest
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     # the ingest history leaves base + two committed segments
     suffix = "_compact"
-    so._ann_lay_ingest_history(spark, sf_dir, suffix)
-    _, ppath, mpath = so._ann_index_paths(sf_dir, suffix)
+    ai._ann_lay_ingest_history(spark, sf_dir, suffix)
+    _, ppath, mpath = ai._ann_index_paths(sf_dir, suffix)
     root = os.path.dirname(mpath)
-    live = so._ann_live_paths(root)
+    live = ai._ann_live_paths(root)
     assert len(live) == 3, "test premise: base + two segments"
 
     shutil.rmtree(live[1])  # delete a committed segment
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
     with pytest.raises(FileNotFoundError):
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
 
     # the gated maintenance verb recovers via its rebuild route
     row = QUERIES["sink_ann_index_compact_only"](spark, sf_dir).collect()[0]
@@ -1190,33 +1270,33 @@ def test_ann_append_empty_delta_is_noop(spark, sf_dir):
     metric into serve+build via its artifact gate."""
     import os
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
     from pyspark_caffe_spark.tables import load_table
 
     suffix = "_emptyseg"
-    so._build_ann_index(spark, sf_dir, suffix=suffix)
-    _, ppath, mpath = so._ann_index_paths(sf_dir, suffix)
+    ai._build_ann_index(spark, sf_dir, suffix=suffix)
+    _, ppath, mpath = ai._ann_index_paths(sf_dir, suffix)
     root = os.path.dirname(mpath)
-    manifest_before = so._ann_manifest_read(root)
+    manifest_before = ai._ann_manifest_read(root)
     baseline = (
-        so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+        ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
         .count()
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    so._ann_append(spark, sf_dir, suffix, emb.filter(F.lit(False)))
+    ai._ann_append(spark, sf_dir, suffix, emb.filter(F.lit(False)))
 
-    assert so._ann_manifest_read(root) == manifest_before, (
+    assert ai._ann_manifest_read(root) == manifest_before, (
         "empty append must not commit a manifest line"
     )
     assert not any(
         n.startswith("postings_seg") for n in os.listdir(root)
     ), "empty append must not leave a segment dir"
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
     assert (
-        so._serve_from_ann_index(
+        ai._serve_from_ann_index(
             spark, sf_dir, with_recall=False, suffix=suffix, validate_corpus=True
         ).count()
         == baseline
@@ -1235,14 +1315,14 @@ def test_ann_append_never_reuses_vanished_segment_number(spark, sf_dir):
 
     import pytest
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
     from pyspark_caffe_spark.tables import load_table
 
     suffix = "_segreuse"
-    so._ann_lay_ingest_history(spark, sf_dir, suffix)
-    _, _, mpath = so._ann_index_paths(sf_dir, suffix)
+    ai._ann_lay_ingest_history(spark, sf_dir, suffix)
+    _, _, mpath = ai._ann_index_paths(sf_dir, suffix)
     root = os.path.dirname(mpath)
-    live = so._ann_live_paths(root)
+    live = ai._ann_live_paths(root)
     assert [os.path.basename(p) for p in live] == [
         "postings", "postings_seg1", "postings_seg2",
     ]
@@ -1251,18 +1331,18 @@ def test_ann_append_never_reuses_vanished_segment_number(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    so._ann_append(
+    ai._ann_append(
         spark, sf_dir, suffix, emb.filter(F.pmod(F.col("vec_id"), F.lit(50)) == 1)
     )
 
-    _gen, _n, _fp, segs = so._ann_manifest_read(root)
+    _gen, _n, _fp, segs = ai._ann_manifest_read(root)
     names = [s[0] for s in segs]
     assert names == ["postings_seg1", "postings_seg2", "postings_seg3"], names
     assert len(set(names)) == len(names), "manifest must never repeat a segment"
     # the vanished committed segment still fails loud (not silently
     # served without, not double-counted)
     with pytest.raises(FileNotFoundError):
-        so._ann_live_paths(root)
+        ai._ann_live_paths(root)
     shutil.rmtree(root, ignore_errors=True)
 
 
@@ -1279,21 +1359,21 @@ def test_ann_segment_serve_prunes_every_leg(spark, sf_dir):
     import os
     import re
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
     from pyspark_caffe_spark.tables import load_table
 
     suffix = "_segplan"
     delta_pred = F.pmod(F.col("vec_id"), F.lit(10)) == 7
-    so._build_ann_index(spark, sf_dir, corpus_filter=~delta_pred, suffix=suffix)
+    ai._build_ann_index(spark, sf_dir, corpus_filter=~delta_pred, suffix=suffix)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    so._ann_append(spark, sf_dir, suffix, emb.filter(delta_pred))
-    _, ppath, mpath = so._ann_index_paths(sf_dir, suffix)
+    ai._ann_append(spark, sf_dir, suffix, emb.filter(delta_pred))
+    _, ppath, mpath = ai._ann_index_paths(sf_dir, suffix)
     root = os.path.dirname(mpath)
-    assert len(so._ann_live_paths(root)) == 2
+    assert len(ai._ann_live_paths(root)) == 2
 
-    served = so._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
+    served = ai._serve_from_ann_index(spark, sf_dir, with_recall=False, suffix=suffix)
     plan = _plan(served)
     # every postings leg (base + segment) partition-prunes on cell
     leg_scans = [
@@ -1309,8 +1389,8 @@ def test_ann_segment_serve_prunes_every_leg(spark, sf_dir):
     )
 
     # compaction folds to one leg; answers must be byte-identical
-    so._ann_compact_postings(spark, ppath)
-    after_served = so._serve_from_ann_index(
+    ai._ann_compact_postings(spark, ppath)
+    after_served = ai._serve_from_ann_index(
         spark, sf_dir, with_recall=False, suffix=suffix
     )
     after_plan = _plan(after_served)
@@ -1335,7 +1415,7 @@ def test_ann_manifest_roundtrip_property(tmp_path):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     names = st.from_regex(r"postings(_gen[0-9]{1,6}|_seg[0-9]{1,6})?", fullmatch=True)
     deltas = st.integers(min_value=-(10**37), max_value=10**37)
@@ -1346,11 +1426,11 @@ def test_ann_manifest_roundtrip_property(tmp_path):
            segs=st.lists(seg, max_size=6))
     def check(gen, segs):
         root = str(tmp_path)
-        so._ann_manifest_commit(root, gen, tuple(segs))
-        got = so._ann_manifest_read(root)
+        ai._ann_manifest_commit(root, gen, tuple(segs))
+        got = ai._ann_manifest_read(root)
         assert got == (gen[0], gen[1], gen[2], tuple(segs))
         meta = {"corpus_n": 11, "corpus_fp": "42"}
-        n, fp, manifest = so._ann_effective_stamp(root, meta)
+        n, fp, manifest = ai._ann_effective_stamp(root, meta)
         assert n == 11 + gen[1] + sum(s[1] for s in segs)
         assert int(fp) == 42 + gen[2] + sum(s[2] for s in segs)
         assert manifest == got
@@ -1362,19 +1442,19 @@ def test_ann_manifest_parse_defensive(tmp_path):
     """Torn/garbage manifest content must resolve to the base layout
     (the serve path's existence checks then fail loud with the rebuild
     route if base is gone) — never raise, never escape root."""
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     root = str(tmp_path)
-    mf = tmp_path / so._ANN_GEN_POINTER
+    mf = tmp_path / ai._ANN_GEN_POINTER
 
     # absent file → base, no segments
-    assert so._ann_manifest_read(root) == so._ANN_MANIFEST_BASE
+    assert ai._ann_manifest_read(root) == ai._ANN_MANIFEST_BASE
 
     # healthy manifest round-trips, commit is atomic-replace + fsync
-    so._ann_manifest_commit(
+    ai._ann_manifest_commit(
         root, ("postings_gen3", 7, -123), (("postings_seg2", 5, 99),)
     )
-    assert so._ann_manifest_read(root) == (
+    assert ai._ann_manifest_read(root) == (
         "postings_gen3",
         7,
         -123,
@@ -1383,16 +1463,16 @@ def test_ann_manifest_parse_defensive(tmp_path):
 
     # bare name (pre-segment pointer file) → that gen, delta 0
     mf.write_text("postings_gen7\n")
-    assert so._ann_manifest_read(root) == ("postings_gen7", 0, 0, ())
+    assert ai._ann_manifest_read(root) == ("postings_gen7", 0, 0, ())
 
     # garbage → base fallback
     for junk in ("", "   \n", "a b\n", "gen one two\n", "g 1 2 3\n", "/\n"):
         mf.write_text(junk)
-        assert so._ann_manifest_read(root) == so._ANN_MANIFEST_BASE, repr(junk)
+        assert ai._ann_manifest_read(root) == ai._ANN_MANIFEST_BASE, repr(junk)
 
     # path-traversal names are basename()-d, never escape root
     mf.write_text("../../etc 1 2\n")
-    name, _n, _fp, _segs = so._ann_manifest_read(root)
+    name, _n, _fp, _segs = ai._ann_manifest_read(root)
     assert name == "etc"
 
 
@@ -1405,41 +1485,41 @@ def test_ann_append_auto_compacts_at_segment_cap(spark, sf_dir, monkeypatch):
     import os
     import shutil
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
     from pyspark_caffe_spark.tables import load_table
 
     suffix = "_segcap"
-    monkeypatch.setattr(so, "_ANN_MAX_SEGMENTS", 3)
+    monkeypatch.setattr(ai, "_ANN_MAX_SEGMENTS", 3)
     slices = [F.pmod(F.col("vec_id"), F.lit(20)) == v for v in (5, 11, 17)]
-    so._build_ann_index(
+    ai._build_ann_index(
         spark, sf_dir, corpus_filter=~(slices[0] | slices[1] | slices[2]),
         suffix=suffix,
     )
-    root = so._ann_root(sf_dir, suffix)
+    root = ai._ann_root(sf_dir, suffix)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
 
     # appends 1-2: segments accumulate under the cap
-    so._ann_append(spark, sf_dir, suffix, emb.filter(slices[0]))
-    so._ann_append(spark, sf_dir, suffix, emb.filter(slices[1]))
-    assert len(so._ann_manifest_read(root)[3]) == 2
+    ai._ann_append(spark, sf_dir, suffix, emb.filter(slices[0]))
+    ai._ann_append(spark, sf_dir, suffix, emb.filter(slices[1]))
+    assert len(ai._ann_manifest_read(root)[3]) == 2
 
     # append 3 reaches the cap: commits, then auto-folds to ONE generation
-    so._ann_append(spark, sf_dir, suffix, emb.filter(slices[2]))
-    name, _gn, _gfp, segs = so._ann_manifest_read(root)
+    ai._ann_append(spark, sf_dir, suffix, emb.filter(slices[2]))
+    name, _gn, _gfp, segs = ai._ann_manifest_read(root)
     assert segs == (), "auto-compact must fold every live segment"
     assert name.startswith("postings_gen")
-    assert len(so._ann_live_paths(root)) == 1
+    assert len(ai._ann_live_paths(root)) == 1
 
     # the folded deltas carried onto the generation line: the derived
     # stamp still covers the FULL corpus, and the guarded serve passes
     meta = spark.read.parquet(os.path.join(root, "meta")).collect()[0]
-    eff_n, _fp, _m = so._ann_effective_stamp(root, meta)
+    eff_n, _fp, _m = ai._ann_effective_stamp(root, meta)
     assert eff_n == emb.count()
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
     assert (
-        so._serve_from_ann_index(
+        ai._serve_from_ann_index(
             spark, sf_dir, with_recall=False, suffix=suffix, validate_corpus=True
         ).count()
         > 0
@@ -1463,47 +1543,47 @@ def test_ann_auto_compact_crash_leaves_appended_segment_live(
 
     import pytest
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
     from pyspark_caffe_spark.tables import load_table
 
     suffix = "_segcapcrash"
-    monkeypatch.setattr(so, "_ANN_MAX_SEGMENTS", 2)
+    monkeypatch.setattr(ai, "_ANN_MAX_SEGMENTS", 2)
     s1 = F.pmod(F.col("vec_id"), F.lit(20)) == 5
     s2 = F.pmod(F.col("vec_id"), F.lit(20)) == 11
-    so._build_ann_index(spark, sf_dir, corpus_filter=~(s1 | s2), suffix=suffix)
-    root = so._ann_root(sf_dir, suffix)
+    ai._build_ann_index(spark, sf_dir, corpus_filter=~(s1 | s2), suffix=suffix)
+    root = ai._ann_root(sf_dir, suffix)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
 
-    so._ann_append(spark, sf_dir, suffix, emb.filter(s1))
-    assert len(so._ann_manifest_read(root)[3]) == 1
+    ai._ann_append(spark, sf_dir, suffix, emb.filter(s1))
+    assert len(ai._ann_manifest_read(root)[3]) == 1
 
     # crash INSIDE the auto-triggered compaction: the durability fence
     # on the new generation reports EIO, so the compact aborts BEFORE
     # its commit point (the fence's designed abort path)
-    real_fsync_tree = so._fsync_tree
+    real_fsync_tree = ai._fsync_tree
 
     def exploding(path):
         if os.path.basename(path).startswith("postings_gen"):
             raise OSError(errno.EIO, "injected EIO on the new generation")
         real_fsync_tree(path)
 
-    monkeypatch.setattr(so, "_fsync_tree", exploding)
+    monkeypatch.setattr(ai, "_fsync_tree", exploding)
     with pytest.raises(OSError):
-        so._ann_append(spark, sf_dir, suffix, emb.filter(s2))
-    monkeypatch.setattr(so, "_fsync_tree", real_fsync_tree)
+        ai._ann_append(spark, sf_dir, suffix, emb.filter(s2))
+    monkeypatch.setattr(ai, "_fsync_tree", real_fsync_tree)
 
     # the append itself committed: both segments live, stamp exact,
     # index servable; the crashed rewrite is an invisible orphan
-    name, _gn, _gfp, segs = so._ann_manifest_read(root)
+    name, _gn, _gfp, segs = ai._ann_manifest_read(root)
     assert name == "postings" and len(segs) == 2
     meta = spark.read.parquet(os.path.join(root, "meta")).collect()[0]
-    eff_n, _fp, _m = so._ann_effective_stamp(root, meta)
+    eff_n, _fp, _m = ai._ann_effective_stamp(root, meta)
     assert eff_n == emb.count()
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
     assert (
-        so._serve_from_ann_index(
+        ai._serve_from_ann_index(
             spark, sf_dir, with_recall=False, suffix=suffix, validate_corpus=True
         ).count()
         > 0
@@ -1511,8 +1591,8 @@ def test_ann_auto_compact_crash_leaves_appended_segment_live(
 
     # recovery: the next compaction folds both segments AND garbage-
     # collects the crash orphan
-    new_ppath = so._ann_compact_postings(
-        spark, so._ann_index_paths(sf_dir, suffix)[1]
+    new_ppath, _ = ai._ann_compact_postings(
+        spark, ai._ann_index_paths(sf_dir, suffix)[1]
     )
     leftovers = sorted(
         n
@@ -1532,31 +1612,31 @@ def test_ann_manifest_commit_fences_concurrent_writer(tmp_path):
     writer's manifest lines, orphaning committed corpus data)."""
     import pytest
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     root = str(tmp_path)
-    so._ann_manifest_commit(root, ("postings", 0, 0), ())  # unconditional init
-    snapshot = so._ann_manifest_read(root)
+    ai._ann_manifest_commit(root, ("postings", 0, 0), ())  # unconditional init
+    snapshot = ai._ann_manifest_read(root)
 
     # writer B (an append) wins the race: its fenced commit applies
-    so._ann_manifest_commit(
+    ai._ann_manifest_commit(
         root, ("postings", 0, 0), (("postings_seg1", 10, 123),),
         expected=snapshot,
     )
-    after_b = so._ann_manifest_read(root)
+    after_b = ai._ann_manifest_read(root)
     assert after_b[3] == (("postings_seg1", 10, 123),)
 
     # writer A (a compaction folding the OLD layout) loses: fenced out,
     # nothing applied
-    with pytest.raises(so.AnnConcurrentWriterError):
-        so._ann_manifest_commit(
+    with pytest.raises(ai.AnnConcurrentWriterError):
+        ai._ann_manifest_commit(
             root, ("postings_gen1", 0, 0), (), expected=snapshot
         )
-    assert so._ann_manifest_read(root) == after_b, "loser must not commit"
+    assert ai._ann_manifest_read(root) == after_b, "loser must not commit"
 
     # a writer that re-read the LIVE layout proceeds normally
-    so._ann_manifest_commit(root, ("postings_gen1", 10, 123), (), expected=after_b)
-    assert so._ann_manifest_read(root)[0] == "postings_gen1"
+    ai._ann_manifest_commit(root, ("postings_gen1", 10, 123), (), expected=after_b)
+    assert ai._ann_manifest_read(root)[0] == "postings_gen1"
 
 
 def test_ann_compact_vanished_base_generation_fails_loud(spark, sf_dir):
@@ -1572,13 +1652,13 @@ def test_ann_compact_vanished_base_generation_fails_loud(spark, sf_dir):
 
     import pytest
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     suffix = "_compact"
-    so._ann_lay_ingest_history(spark, sf_dir, suffix)
-    _, ppath, mpath = so._ann_index_paths(sf_dir, suffix)
+    ai._ann_lay_ingest_history(spark, sf_dir, suffix)
+    _, ppath, mpath = ai._ann_index_paths(sf_dir, suffix)
     root = os.path.dirname(mpath)
-    ppath = so._ann_compact_postings(spark, ppath)  # → gen1, folded deltas
+    ppath, _ = ai._ann_compact_postings(spark, ppath)  # → gen1, folded deltas
     gen_name = os.path.basename(ppath)
     assert gen_name.startswith("postings_gen")
 
@@ -1594,13 +1674,13 @@ def test_ann_compact_vanished_base_generation_fails_loud(spark, sf_dir):
     shutil.rmtree(ppath)
 
     with pytest.raises(FileNotFoundError):
-        so._ann_compact_postings(spark, so._ann_index_paths(sf_dir, suffix)[1])
+        ai._ann_compact_postings(spark, ai._ann_index_paths(sf_dir, suffix)[1])
     # fail-loud means NO commit: the manifest still names the vanished
     # generation (nothing silently rewrote the layout)
-    assert so._ann_manifest_read(root)[0] == gen_name
+    assert ai._ann_manifest_read(root)[0] == gen_name
 
     # the gated maintenance verb recovers via its rebuild route
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
     row = QUERIES["sink_ann_index_compact_only"](spark, sf_dir).collect()[0]
     assert row.content_identical and row.stamp_still_valid
 
@@ -1615,21 +1695,21 @@ def test_ann_reset_keeps_lock_inode_and_sweeps_tmps(tmp_path):
     so it can never unlink a LIVE commit's tmp mid-write)."""
     import os
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     root = str(tmp_path)
-    so._ann_manifest_commit(root, ("postings", 0, 0), ())  # creates .lock
-    lock_path = os.path.join(root, so._ANN_GEN_POINTER + ".lock")
+    ai._ann_manifest_commit(root, ("postings", 0, 0), ())  # creates .lock
+    lock_path = os.path.join(root, ai._ANN_GEN_POINTER + ".lock")
     assert os.path.exists(lock_path)
     ino_before = os.stat(lock_path).st_ino
     # plant a torn tmp from a "crashed" commit and a live manifest
-    torn = os.path.join(root, so._ANN_GEN_POINTER + ".tmp.deadbeef")
+    torn = os.path.join(root, ai._ANN_GEN_POINTER + ".tmp.deadbeef")
     with open(torn, "w") as f:
         f.write("postings_gen9 1 1\n")
 
-    so._ann_reset_generations(root)
+    ai._ann_reset_generations(root)
 
-    assert not os.path.exists(os.path.join(root, so._ANN_GEN_POINTER))
+    assert not os.path.exists(os.path.join(root, ai._ANN_GEN_POINTER))
     assert not os.path.exists(torn), "torn commit tmp must be swept"
     assert os.path.exists(lock_path), ".lock must survive reset"
     assert os.stat(lock_path).st_ino == ino_before, (
@@ -1647,7 +1727,7 @@ def test_ann_commit_unique_tmp_no_litter(tmp_path, monkeypatch):
 
     import pytest
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     root = str(tmp_path)
     seen = []
@@ -1657,26 +1737,26 @@ def test_ann_commit_unique_tmp_no_litter(tmp_path, monkeypatch):
         seen.append(os.path.basename(src))
         return real_replace(src, dst)
 
-    monkeypatch.setattr(so.os, "replace", spy)
-    so._ann_manifest_commit(root, ("postings", 0, 0), ())
-    so._ann_manifest_commit(root, ("postings", 0, 0), (("postings_seg1", 1, 1),))
+    monkeypatch.setattr(ai.os, "replace", spy)
+    ai._ann_manifest_commit(root, ("postings", 0, 0), ())
+    ai._ann_manifest_commit(root, ("postings", 0, 0), (("postings_seg1", 1, 1),))
     assert len(seen) == 2 and seen[0] != seen[1], seen
-    assert all(s.startswith(so._ANN_GEN_POINTER + ".tmp.") for s in seen), seen
+    assert all(s.startswith(ai._ANN_GEN_POINTER + ".tmp.") for s in seen), seen
 
     def boom(src, dst):
         raise OSError("simulated replace failure")
 
-    monkeypatch.setattr(so.os, "replace", boom)
+    monkeypatch.setattr(ai.os, "replace", boom)
     with pytest.raises(OSError, match="simulated"):
-        so._ann_manifest_commit(root, ("postings", 2, 2), ())
-    monkeypatch.setattr(so.os, "replace", real_replace)
+        ai._ann_manifest_commit(root, ("postings", 2, 2), ())
+    monkeypatch.setattr(ai.os, "replace", real_replace)
     litter = [
         n for n in os.listdir(root)
-        if n.startswith(so._ANN_GEN_POINTER + ".tmp")
+        if n.startswith(ai._ANN_GEN_POINTER + ".tmp")
     ]
     assert litter == [], f"failed commit left tmp litter: {litter}"
     # the failed commit never applied: manifest still names seg1
-    assert so._ann_manifest_read(root)[3] == (("postings_seg1", 1, 1),)
+    assert ai._ann_manifest_read(root)[3] == (("postings_seg1", 1, 1),)
 
 
 def test_ann_unconditional_commit_serializes_under_fence_lock(tmp_path):
@@ -1689,7 +1769,7 @@ def test_ann_unconditional_commit_serializes_under_fence_lock(tmp_path):
     import threading
     import time
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     root = str(tmp_path)
     held = threading.Event()
@@ -1697,12 +1777,12 @@ def test_ann_unconditional_commit_serializes_under_fence_lock(tmp_path):
     done = threading.Event()
 
     def holder():
-        with so._ann_commit_lock(root):
+        with ai._ann_commit_lock(root):
             held.set()
             release.wait(timeout=30)
 
     def committer():
-        so._ann_manifest_commit(root, ("postings", 0, 0), ())
+        ai._ann_manifest_commit(root, ("postings", 0, 0), ())
         done.set()
 
     th = threading.Thread(target=holder)
@@ -1718,7 +1798,7 @@ def test_ann_unconditional_commit_serializes_under_fence_lock(tmp_path):
     th.join(timeout=30)
     tc.join(timeout=30)
     assert done.is_set()
-    assert so._ann_manifest_read(root)[0] == "postings"
+    assert ai._ann_manifest_read(root)[0] == "postings"
 
 
 def test_ann_concurrent_refresh_append_race_fences_loser(spark, sf_dir, monkeypatch):
@@ -1736,24 +1816,24 @@ def test_ann_concurrent_refresh_append_race_fences_loser(spark, sf_dir, monkeypa
     import shutil
     import threading
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
     from pyspark_caffe_spark.tables import load_table
 
     suffix = "_race16"
     d1 = F.pmod(F.col("vec_id"), F.lit(10)) == 3
     d2 = F.pmod(F.col("vec_id"), F.lit(10)) == 7
-    so._build_ann_index(spark, sf_dir, corpus_filter=~(d1 | d2), suffix=suffix)
+    ai._build_ann_index(spark, sf_dir, corpus_filter=~(d1 | d2), suffix=suffix)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    root = os.path.dirname(so._ann_index_paths(sf_dir, suffix)[2])
+    root = os.path.dirname(ai._ann_index_paths(sf_dir, suffix)[2])
 
     # gate: both appends must reach their fenced commit having read the
     # SAME layout snapshot — the barrier releases them together, the
     # flock then serializes the commits and the fence rejects the
     # second (a deterministic lost-update setup, not a lucky
     # interleaving)
-    real_commit = so._ann_manifest_commit
+    real_commit = ai._ann_manifest_commit
     barrier = threading.Barrier(2, timeout=120)
     armed = threading.Event()
     armed.set()
@@ -1767,12 +1847,12 @@ def test_ann_concurrent_refresh_append_race_fences_loser(spark, sf_dir, monkeypa
             armed.clear()
         return real_commit(root_, gen, segs, expected=expected)
 
-    monkeypatch.setattr(so, "_ann_manifest_commit", gated)
+    monkeypatch.setattr(ai, "_ann_manifest_commit", gated)
     errs: dict[str, Exception] = {}
 
     def ingest(name: str, delta) -> None:
         try:
-            so._ann_append(spark, sf_dir, suffix, delta)
+            ai._ann_append(spark, sf_dir, suffix, delta)
         except Exception as ex:  # noqa: BLE001
             errs[name] = ex
 
@@ -1785,25 +1865,25 @@ def test_ann_concurrent_refresh_append_race_fences_loser(spark, sf_dir, monkeypa
 
     assert len(errs) == 1, f"exactly one loser expected, got: {errs!r}"
     ((loser, ex),) = errs.items()
-    assert isinstance(ex, so.AnnConcurrentWriterError), ex
+    assert isinstance(ex, ai.AnnConcurrentWriterError), ex
 
     # no torn stamp: the manifest parses to base + exactly the
     # winner's ONE segment, and that segment dir exists on disk
-    m = so._ann_manifest_read(root)
+    m = ai._ann_manifest_read(root)
     assert m[0] == "postings" and len(m[3]) == 1, m
     assert os.path.isdir(os.path.join(root, m[3][0][0]))
 
     # documented recovery: the loser retries from a fresh layout read
-    so._ann_append(
+    ai._ann_append(
         spark, sf_dir, suffix, emb.filter(d1 if loser == "d1" else d2)
     )
-    assert len(so._ann_manifest_read(root)[3]) == 2
+    assert len(ai._ann_manifest_read(root)[3]) == 2
 
     # the refreshed index now validates as the FULL corpus (derived
     # stamp = meta + both segment deltas) and serves exactly k=10
     # results per query with the guard on
-    so._ANN_VALIDATED.clear()
-    served = so._serve_from_ann_index(
+    ai._ANN_VALIDATED.clear()
+    served = ai._serve_from_ann_index(
         spark, sf_dir, with_recall=False, suffix=suffix, validate_corpus=True
     )
     per_q = (
@@ -1834,20 +1914,20 @@ def test_ann_append_racing_rebuild_fails_loud_on_guarded_serve(spark, sf_dir):
 
     import pytest
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
     from pyspark_caffe_spark.tables import load_table
 
     suffix = "_aba16"
     delta_pred = F.pmod(F.col("vec_id"), F.lit(10)) == 7
     # writer A's world: base built WITHOUT the delta slice
-    so._build_ann_index(spark, sf_dir, corpus_filter=~delta_pred, suffix=suffix)
-    root = os.path.dirname(so._ann_index_paths(sf_dir, suffix)[2])
-    assert so._ann_manifest_read(root) == so._ANN_MANIFEST_BASE
+    ai._build_ann_index(spark, sf_dir, corpus_filter=~delta_pred, suffix=suffix)
+    root = os.path.dirname(ai._ann_index_paths(sf_dir, suffix)[2])
+    assert ai._ann_manifest_read(root) == ai._ANN_MANIFEST_BASE
 
     # writer B lands a full REBUILD: manifest absent before AND after
     # (base → base), meta now fingerprints the FULL corpus
-    so._build_ann_index(spark, sf_dir, suffix=suffix)
-    assert so._ann_manifest_read(root) == so._ANN_MANIFEST_BASE
+    ai._build_ann_index(spark, sf_dir, suffix=suffix)
+    assert ai._ann_manifest_read(root) == ai._ANN_MANIFEST_BASE
 
     # writer A's append now commits: the fence compares base == base
     # and PASSES (the ABA blind spot) even though A's delta vectors
@@ -1855,14 +1935,14 @@ def test_ann_append_racing_rebuild_fails_loud_on_guarded_serve(spark, sf_dir):
     delta = load_table(spark, sf_dir, "embeddings").filter(delta_pred).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    so._ann_append(spark, sf_dir, suffix, delta)
-    assert len(so._ann_manifest_read(root)[3]) == 1  # the ABA commit applied
+    ai._ann_append(spark, sf_dir, suffix, delta)
+    assert len(ai._ann_manifest_read(root)[3]) == 1  # the ABA commit applied
 
     # the guarded serve converts the blind spot to fails-loud: the
     # derived stamp (full + slice) cannot match the dataset
-    so._ANN_VALIDATED.clear()
+    ai._ANN_VALIDATED.clear()
     with pytest.raises(ValueError, match="corpus drift"):
-        so._serve_from_ann_index(
+        ai._serve_from_ann_index(
             spark, sf_dir, with_recall=False, suffix=suffix, validate_corpus=True
         )
     shutil.rmtree(root, ignore_errors=True)
@@ -1879,11 +1959,11 @@ def test_ann_manifest_stays_world_readable(tmp_path):
     import os
     import stat
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     root = str(tmp_path)
-    so._ann_manifest_commit(root, ("postings", 0, 0), (("postings_seg1", 1, 1),))
-    mode = os.stat(os.path.join(root, so._ANN_GEN_POINTER)).st_mode
+    ai._ann_manifest_commit(root, ("postings", 0, 0), (("postings_seg1", 1, 1),))
+    mode = os.stat(os.path.join(root, ai._ANN_GEN_POINTER)).st_mode
     assert mode & stat.S_IRGRP and mode & stat.S_IROTH, oct(mode)
 
 
@@ -1896,21 +1976,21 @@ def test_ann_compact_gc_sweeps_crash_orphan_tmps(spark, sf_dir):
     import os
     import shutil
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     suffix = "_tmpgc16"
-    so._ann_lay_ingest_history(spark, sf_dir, suffix)
-    _, ppath, mpath = so._ann_index_paths(sf_dir, suffix)
+    ai._ann_lay_ingest_history(spark, sf_dir, suffix)
+    _, ppath, mpath = ai._ann_index_paths(sf_dir, suffix)
     root = os.path.dirname(mpath)
-    orphan = os.path.join(root, so._ANN_GEN_POINTER + ".tmp.deadcafe")
+    orphan = os.path.join(root, ai._ANN_GEN_POINTER + ".tmp.deadcafe")
     with open(orphan, "w") as f:
         f.write("postings_gen99 9 9\n")
 
-    so._ann_compact_postings(spark, ppath)
+    ai._ann_compact_postings(spark, ppath)
 
     assert not os.path.exists(orphan), "compact GC must sweep crash tmps"
     # the live manifest survived the sweep
-    assert so._ann_manifest_read(root)[0].startswith("postings_gen")
+    assert ai._ann_manifest_read(root)[0].startswith("postings_gen")
     shutil.rmtree(root, ignore_errors=True)
 
 
@@ -1927,17 +2007,17 @@ def test_ann_manifest_read_never_raises_on_garbage(tmp_path):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     root = str(tmp_path)
-    manifest = os.path.join(root, so._ANN_GEN_POINTER)
+    manifest = os.path.join(root, ai._ANN_GEN_POINTER)
 
     @settings(max_examples=300, deadline=None)
     @given(st.binary(max_size=512))
     def check(blob: bytes) -> None:
         with open(manifest, "wb") as f:
             f.write(blob)
-        got = so._ann_manifest_read(root)
+        got = ai._ann_manifest_read(root)
         assert isinstance(got, tuple) and len(got) == 4
         name, n, fp, segs = got
         # round-17 (ADVICE): "/" not in name was too weak — basename
@@ -1954,10 +2034,10 @@ def test_ann_manifest_read_never_raises_on_garbage(tmp_path):
     check()
     # round-trip property on top: whatever a commit writes, the parser
     # returns verbatim
-    so._ann_manifest_commit(
+    ai._ann_manifest_commit(
         root, ("postings_gen3", 5, 99), (("postings_seg7", 2, 11),)
     )
-    assert so._ann_manifest_read(root) == (
+    assert ai._ann_manifest_read(root) == (
         "postings_gen3", 5, 99, (("postings_seg7", 2, 11),)
     )
 
@@ -1972,16 +2052,16 @@ def test_ann_manifest_dotdot_line_resolves_to_base(tmp_path):
     the BASE layout, which _ann_base_path resolves inside root."""
     import os
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     root = str(tmp_path)
-    manifest = os.path.join(root, so._ANN_GEN_POINTER)
+    manifest = os.path.join(root, ai._ANN_GEN_POINTER)
     for garbage in ("..\n", ".\n", "a/..\n", "ok 1 2\n.. 3 4\n"):
         with open(manifest, "w") as f:
             f.write(garbage)
-        parsed = so._ann_manifest_read(root)
-        assert parsed == so._ANN_MANIFEST_BASE, garbage
-        base = so._ann_base_path(root, parsed)
+        parsed = ai._ann_manifest_read(root)
+        assert parsed == ai._ANN_MANIFEST_BASE, garbage
+        base = ai._ann_base_path(root, parsed)
         assert os.path.abspath(base).startswith(os.path.abspath(root) + os.sep)
 
 
@@ -1995,13 +2075,13 @@ def test_ann_manifest_commit_fchmod_failure_leaves_no_litter(tmp_path, monkeypat
     import glob
     import os
 
-    import pyspark_caffe_spark.queries.scale_ops as so
+    import pyspark_caffe_spark.annindex as ai
 
     import pytest
 
     root = str(tmp_path)
-    so._ann_manifest_commit(root, ("postings_gen1", 1, 1), ())
-    live_before = so._ann_manifest_read(root)
+    ai._ann_manifest_commit(root, ("postings_gen1", 1, 1), ())
+    live_before = ai._ann_manifest_read(root)
 
     def boom(fd, mode):
         raise OSError(5, "Input/output error")
@@ -2009,10 +2089,10 @@ def test_ann_manifest_commit_fchmod_failure_leaves_no_litter(tmp_path, monkeypat
     # monkeypatch restores os.fchmod at teardown — no manual undo
     monkeypatch.setattr(os, "fchmod", boom)
     with pytest.raises(OSError):
-        so._ann_manifest_commit(root, ("postings_gen2", 2, 2), ())
+        ai._ann_manifest_commit(root, ("postings_gen2", 2, 2), ())
     monkeypatch.undo()
 
     # no tmp litter survived the failed commit...
-    assert glob.glob(os.path.join(root, so._ANN_GEN_POINTER + ".tmp.*")) == []
+    assert glob.glob(os.path.join(root, ai._ANN_GEN_POINTER + ".tmp.*")) == []
     # ...and the live manifest still carries the pre-failure layout
-    assert so._ann_manifest_read(root) == live_before
+    assert ai._ann_manifest_read(root) == live_before
